@@ -88,14 +88,7 @@ object Amplify {
 
   def main(args: Array[String]): Unit = {
     val Array(src, dest, kStr) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     amplify(spark, src, dest, kStr.toInt)
     spark.stop()
   }

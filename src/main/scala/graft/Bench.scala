@@ -1,33 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // The bounded top-k AGGREGATES (TopKPairs) keep <= k-entry
-      // buffers per group; the default ObjectHashAggregate fallback
-      // threshold (128 in-memory groups per partition) would push them
-      // back into a per-partition SORT -- exactly the input-sized sort
-      // the aggregate replaces. 128k groups x ~100 B buffer is ~13 MB
-      // per partition: hash aggregation stays safe at any scale, and
-      // the knob stays env-tunable for cluster profiles.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJAGG_GROUPS", "131072"))
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Deep-memo lineage cut ON for the bench (default-off so the plan
-    // audits in sbt test see full memo subtrees; see Memo.lineageCut's
-    // doc for the cluster-scale reliable-checkpoint story).
-    Memo.lineageCut = true
+    val cores = GraftSession.defaultCores
+    val spark = GraftSession(cores)
     // Per-memo task-CPU attribution: the concurrent warm pass makes
     // each memo's WALL build time (memo_sec) an interference-inflated
     // upper bound. Sum each build's task CPU time by job group —
@@ -94,7 +70,7 @@ object Bench {
     // eagerTiming=true changes Memo semantics (every later build in the
     // process would eagerly count()) for any same-JVM caller after us.
     // The warm pass is UNTIMED per query and order-independent, so run
-    // it with a small pool of concurrent queries (guide §2.6: overlap
+    // it with one concurrent query per core (guide §2.6: overlap
     // independent jobs — one query's straggler tail back-fills with the
     // next query's stages). Memo/Checkpoint builds are per-key locked,
     // so a shared frame still builds exactly once. The three TIMED
@@ -107,7 +83,7 @@ object Bench {
     // Warm-pass honesty: a query that fails to warm is COUNTED and
     // NAMED (warm_errors/warm_failed in BENCH_DETAIL) instead of
     // silently skipped, and only NonFatal throwables are swallowed —
-    // a fatal VM error (OOM under the 8-wide warm) must abort the
+    // a fatal VM error (OOM under the concurrent warm) must abort the
     // bench rather than let 3 timed passes run on a degraded JVM.
     val warmFailed = scala.collection.concurrent.TrieMap[String, String]()
     // a FATAL throwable (VM error) in a Future body would leave that
@@ -115,9 +91,7 @@ object Bench {
     // future complete, and rethrow on the main thread after the join
     val warmFatal = new java.util.concurrent.atomic.AtomicReference[Throwable]
     try {
-      val warmThreads =
-        sys.env.getOrElse("SPARK_GRAFT_WARM_THREADS", "8").toInt
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(warmThreads)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(cores)
       try {
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.fromExecutorService(pool)

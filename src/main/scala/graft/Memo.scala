@@ -5,8 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Session-level memo of materialized intermediate frames shared across
   * queries — stats tables, verified near-dup pairs, minhash signatures.
   * Keyed by (session, sf dir, tag): a frame is built and cached once per
-  * session and served to every consumer, the way an engine materializes
-  * its statistics and signature tables once rather than per query.
+  * session and served to every consumer as a single cached-relation
+  * leaf, the way an engine materializes its statistics and signature
+  * tables once rather than per query. Tags read by more than one query
+  * are defined once, in [[SharedFrames]].
   */
 object Memo {
   private val frames =
@@ -34,44 +36,17 @@ object Memo {
   private val locks =
     scala.collection.concurrent.TrieMap[(String, String), Object]()
 
-  /** Analyzed-plan node count above which a memo MAY serve a
-    * lineage-CUT frame instead of a plain persist. A cached frame
-    * still carries its full logical plan, and every consumer query
-    * re-pays ANALYSIS of that tree per use — measured (r14, sf0.1):
-    * counting the cached 25-row final pagerank iterate cost 1.03 s
-    * per count (its unrolled lineage is thousands of nodes) vs
-    * 0.10 s for a shallow memo of the same size. The cut replaces the
-    * plan with one leaf over the SAME materialized rows — values,
-    * caching and determinism are unchanged; only the dead re-analysis
-    * goes away. Lazy (eager = false): tests that only force plans
-    * must not trigger execution.
+  /** Persist the build and serve its cache entry's leaf: consumers
+    * analyze one node instead of the memo's whole tree (r14, sf0.1:
+    * counting the cached 25-row final pagerank iterate re-paid 1.03 s
+    * of analysis per count over its unrolled lineage, vs 0.10 s for a
+    * shallow memo). Rows, caching and lineage are unchanged, and the
+    * plan guards still reach the subtree through
+    * `InMemoryTableScanExec.relation.cachedPlan`. Lazy: planning a
+    * consumer must not execute the build.
     */
-  val lineageCutNodes = 96
-
-  /** Opt-in for the deep-plan lineage cut (Bench/Verify/Profile set
-    * it). OFF by default: the plan-shape guards (PlanSpec,
-    * WindowAuditSpec, PlanAudit) must see memoized subtrees as
-    * InMemoryTableScan-over-full-plan, not an opaque leaf — a cut
-    * would hide window/join sites from the 100 TB scale audits.
-    *
-    * Fault-tolerance at cluster scale: `localCheckpoint` truncates
-    * lineage WITHOUT reliable storage — a lost executor at 100 TB
-    * makes the frame's partitions unrecoverable and fails the job
-    * instead of recomputing. So the cut uses reliable `checkpoint()`
-    * whenever a checkpoint dir is configured (a cluster deployment
-    * sets one), and falls back to `localCheckpoint` only without one
-    * (the single-JVM local bench, where executor loss == JVM death
-    * and lineage cannot help anyway). */
-  @volatile var lineageCut: Boolean = false
-
-  private def materialized(df: DataFrame): DataFrame = {
-    val nodes = df.queryExecution.analyzed.collect { case n => n }.size
-    if (lineageCut && nodes > lineageCutNodes) {
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(false)
-      else df.localCheckpoint(false)
-    } else persisted(df)
-  }
+  private def served(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.CachedLeaf(persisted(df))
 
   /** Job-group id for a memo build's jobs (NUL-separated: dirs and
     * tags never contain NUL, so Bench can split it back losslessly). */
@@ -100,7 +75,7 @@ object Memo {
             sc.setJobGroup(cpuGroup(dir, tag), s"memo build: $tag")
             val t0 = System.nanoTime()
             try {
-              val df = materialized(build)
+              val df = served(build)
               df.count()
               buildSecs.put((dir, tag), (System.nanoTime() - t0) / 1e9)
               df
@@ -108,7 +83,7 @@ object Memo {
               sc.setLocalProperty("spark.jobGroup.id", prevG)
               sc.setLocalProperty("spark.job.description", prevD)
             }
-          } else materialized(build)
+          } else served(build)
         })
       }
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for headline queries so scan
   * pruning (ReadSchema/PushedFilters), broadcast choices, and
   * WholeStageCodegen spans can be eyeballed per optimization round.
@@ -15,13 +13,7 @@ object PlanAudit {
       Set("q1_agg", "true_card", "minhash_lsh_dup", "embed_cosine_topk", "window_agg",
         "mcv_est", "cms_freq", "interval_join", "embed_ivf_ann", "dup_clusters", "ur_size",
         "stratified_sample", "chi2_drift", "doc_filter", "dedup_keep_best")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1) if wanted(name)) {
       println(s"\n========== $name ==========")

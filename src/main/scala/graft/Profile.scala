@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round profiler: for each named query, separate the cost
   * of building+planning the DataFrame from executing it (bench-identical
   * `.count()` action), and dump `.explain("formatted")` to a file so plan
@@ -20,33 +18,7 @@ object Profile {
     val sfDir = args(0)
     val outDir = args(1)
     val sel = if (args.length > 2) args(2) else "ALL"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // The bounded top-k AGGREGATES (TopKPairs) keep <= k-entry
-      // buffers per group; the default ObjectHashAggregate fallback
-      // threshold (128 in-memory groups per partition) would push them
-      // back into a per-partition SORT -- exactly the input-sized sort
-      // the aggregate replaces. 128k groups x ~100 B buffer is ~13 MB
-      // per partition: hash aggregation stays safe at any scale, and
-      // the knob stays env-tunable for cluster profiles.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJAGG_GROUPS", "131072"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARFIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64MB"))
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // profile under the same deep-memo lineage cut the bench runs with
-    Memo.lineageCut = true
+    val spark = GraftSession()
     // profiling an AMPLIFIED/scratch dataset must not write its
     // trainer fingerprints into the committed store (the ScaleLadder
     // discipline) — redirect when asked
@@ -109,7 +81,8 @@ object Profile {
           Some(f"$n%-28s build=$build%7.3f plan=$plan%7.3f exec=$exec%7.3f total=${build + plan + exec}%7.3f")
         } catch {
           case scala.util.control.NonFatal(e) =>
-            Some(f"$n%-28s FAILED: ${e.getMessage.linesIterator.next()}")
+            Some(f"$n%-28s FAILED: ${Option(e.getMessage).filter(_.nonEmpty)
+              .map(_.linesIterator.next()).getOrElse(e.getClass.getName)}")
         }
       row.foreach(r => println(s"[profile-row] $r"))
       row

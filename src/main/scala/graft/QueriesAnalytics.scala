@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * distinct-in-window, which Spark cannot partial-aggregate; `kmv_setops`
   * ships at most k=64 hashes per population through the final stage.
   */
-object QueriesAnalytics {
+object QueriesAnalytics extends QueryModule {
 
   private def events(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "events")

@@ -14,7 +14,7 @@ import graft.operators.{Encoding, Fanouts}
   * is exact and independent of partition/accumulation order, then cast
   * back to double.
   */
-object QueriesCore {
+object QueriesCore extends QueryModule {
 
   private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,6)")
 

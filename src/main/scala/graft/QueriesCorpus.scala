@@ -11,7 +11,7 @@ import graft.operators.{Corpus, TextAnalysis}
   * repetition signals, and cluster-aware keep-best dedup resolution.
   * Oracle SQL mirrors the Spark expressions operation-for-operation.
   */
-object QueriesCorpus {
+object QueriesCorpus extends QueryModule {
 
   // ---- row 36: deterministic stratified sampling ----
 

@@ -14,7 +14,7 @@ import graft.query.{CardBenchmark, Engine, Predicate, PredicateSql, PseudoSql}
   * identical operation order on both sides — IEEE doubles then match
   * bit-for-bit.
   */
-object QueriesEstimators {
+object QueriesEstimators extends QueryModule {
 
   // ---- row 9: predicate op suite (estimators.py:94-116 OPS) ----
 

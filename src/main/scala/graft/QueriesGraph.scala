@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * mass on the 2^-20 fixed-point grid (floor-quantized after every
   * multiply, so double rounding can never diverge across engines).
   */
-object QueriesGraph {
+object QueriesGraph extends QueryModule {
 
   // ---- row 99: degree-ordered exact triangle counting ----
 
@@ -106,13 +106,7 @@ object QueriesGraph {
     // The aggregated edge frame feeds nodes/p/r0, each referenced by
     // every unrolled iteration — memoize it or the 4-table join
     // pipeline re-executes once per reference (~11×).
-    val e = Memo(spark, dir, "graph:nationEdges")(
-      Tables(spark, dir, "lineitem")
-        .join(Tables(spark, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables(spark, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("c_nationkey").as("u"), col("s_nationkey").as("v"))
-        .agg(count(lit(1)).as("w")))
+    val e = SharedFrames.nationEdges(spark, dir)
     // nodes and p are ≤|V|²-row frames referenced by every unrolled
     // iteration — memoized so the iterations read a cached handful of
     // rows instead of re-deriving the frame per reference.

@@ -19,7 +19,7 @@ import graft.query.{CardBenchmark, PredicateSql, PseudoSql}
   * Every oracle SQL string is generated from the same narSpecs the
   * Spark plans execute, so the two sides cannot drift.
   */
-object QueriesNar {
+object QueriesNar extends QueryModule {
 
   /** Session-level materialization (see [[Memo]]): shared frames are
     * built once per session and served to every consumer. */

@@ -35,7 +35,7 @@ import graft.streaming.StreamOps
   * re-expression (StreamOps), so the parity row guards an equivalence
   * the reference never had to state.
   */
-object QueriesParity {
+object QueriesParity extends QueryModule {
 
   /** Fixed batch-cut size (events, ordered by event_id). */
   val parityN = 2000

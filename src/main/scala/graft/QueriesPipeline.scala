@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * the repo's portable-exactness grids (cents, 1e-6/1e-3 fixed point,
   * sign-split integer division) so the DuckDB oracle hash-matches.
   */
-object QueriesPipeline {
+object QueriesPipeline extends QueryModule {
 
   // ---- row 118: last-touch attribution ----
 

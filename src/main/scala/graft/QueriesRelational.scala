@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * keyed shuffle joins (AQE may still broadcast them when a filter makes
   * the build side small).
   */
-object QueriesRelational {
+object QueriesRelational extends QueryModule {
 
   private def cents(c: org.apache.spark.sql.Column) =
     expr(s"CAST(floor(${c.toString} * 100 + 0.5) AS BIGINT)")

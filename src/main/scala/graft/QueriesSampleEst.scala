@@ -16,7 +16,7 @@ import graft.query.{CardBenchmark, Predicate, PredicateSql, PseudoSql}
   * Every oracle SQL string is generated from the same specs the Spark
   * plans execute, so the two sides cannot drift.
   */
-object QueriesSampleEst {
+object QueriesSampleEst extends QueryModule {
 
   /** Session-level materialization (see [[Memo]]): shared frames are
     * built once per session and served to every consumer. */

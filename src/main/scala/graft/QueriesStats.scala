@@ -3,13 +3,14 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import graft.operators.Stats
 
 /** Stats / sketch queries (SURVEY.md §2 rows 15-18). Oracle SQL is
   * generated from the same column specs the Spark side iterates.
   */
-object QueriesStats {
+object QueriesStats extends QueryModule {
 
   /** (table, column, isNumeric) */
   val statCols: Seq[(String, String, Boolean)] = Seq(
@@ -202,20 +203,29 @@ object QueriesStats {
     */
   val kmvK = 64
 
-  def kmvNdvQ(spark: SparkSession, dir: String): DataFrame =
-    hllCols
+  def kmvNdvQ(spark: SparkSession, dir: String): DataFrame = kmvNdv(spark, dir, hllCols)
+
+  private[graft] def kmvNdv(spark: SparkSession, dir: String,
+      cols: Seq[(String, String)]): DataFrame =
+    cols
       .map { case (t, c) =>
         // ONE pass over the distinct set: the old plan scanned the
         // table twice (KMV hash sample + a separate count_distinct for
-        // the exact NDV). All four audited columns are integer keys, so
-        // the cast-to-string distinct has exactly count_distinct(c)
-        // rows — exact_ndv is a plain count over the same deduped frame
-        // the sample is drawn from, and the 64-smallest-hash cut runs
-        // as a bounded top-k aggregate (map-side ≤64-entry buffers)
-        // instead of a TakeOrdered pass. m = min(ndv, k) and
-        // hk = k-th smallest hash are identical to the old sample.
+        // the exact NDV). For an integral column the cast-to-string
+        // distinct has exactly count_distinct(c) rows — exact_ndv is a
+        // plain count over the same deduped frame the sample is drawn
+        // from, and the 64-smallest-hash cut runs as a bounded top-k
+        // aggregate (map-side ≤64-entry buffers) instead of a
+        // TakeOrdered pass. m = min(ndv, k) and hk = k-th smallest hash
+        // are identical to the old sample. A floating column would
+        // break that equality (-0.0 and 0.0 are one value but two
+        // strings), so only integral columns are accepted.
+        val table = Tables(spark, dir, t)
+        val dt = table.schema(c).dataType
+        require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
+          s"kmv_ndv needs an integral column: $t.$c is ${dt.simpleString}")
         val topk = udaf(new graft.functions.TopKPairs(kmvK, false))
-        Tables(spark, dir, t)
+        table
           .filter(col(c).isNotNull)
           .select(col(c).cast("string").as("v"))
           .distinct()

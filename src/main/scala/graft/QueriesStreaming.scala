@@ -8,7 +8,7 @@ import graft.streaming.StreamOps
 /** Event-stream queries (SURVEY.md §2 rows 31-33), batch form — the
   * streaming variants run the same transforms (see StreamOps + specs).
   */
-object QueriesStreaming {
+object QueriesStreaming extends QueryModule {
 
   def windowAggQ(spark: SparkSession, dir: String): DataFrame =
     StreamOps

@@ -13,7 +13,7 @@ import graft.operators.{Multimodal, Similarity, TextAnalysis, TextOps}
   * double expressions, and SQL fragments are generated from the same
   * constants the Spark operators use.
   */
-object QueriesText {
+object QueriesText extends QueryModule {
 
   // Shared DuckDB SQL fragments (mirror TextOps exactly).
   private[graft] val wordsCte =
@@ -845,12 +845,12 @@ object QueriesText {
   val pqCentLo = 100L
   val pqNCent = 8
 
+  /** The embeddings that serve as PQ centroids. */
+  private[graft] def pqCentPred: Column =
+    col("vec_id") >= pqCentLo && col("vec_id") < pqCentLo + pqNCent
+
   def embedPqQ(spark: SparkSession, dir: String): DataFrame =
-    Memo(spark, dir, "pqCodes")(
-      Similarity.pqEncode(
-        Tables(spark, dir, "embeddings"),
-        col("vec_id") >= pqCentLo && col("vec_id") < pqCentLo + pqNCent,
-        pqNSub))
+    SharedFrames.pqCodes(spark, dir)
       .orderBy(col("vec_id"), col("m"))
 
   /** CTE chain ending in `best` (the PQ assignment) — shared by
@@ -889,11 +889,9 @@ object QueriesText {
   def pqAdcTopkQ(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val emb = Tables(spark, dir, "embeddings")
-    val centPred = col("vec_id") >= pqCentLo && col("vec_id") < pqCentLo + pqNCent
-    val codes = Memo(spark, dir, "pqCodes")(
-      Similarity.pqEncode(emb, centPred, pqNSub))
+    val codes = SharedFrames.pqCodes(spark, dir)
     val q = emb.select(col("vec_id"), Similarity.quantExpr.as("qv"))
-    val cents = q.filter(centPred).select(col("vec_id").as("code"), col("qv").as("cv"))
+    val cents = q.filter(pqCentPred).select(col("vec_id").as("code"), col("qv").as("cv"))
     val lut = q.filter(col("vec_id") < probeMax)
       .select(col("vec_id").as("probe_id"), col("qv").as("pv"))
       .crossJoin(broadcast(cents))

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * the range-partitioned prefix-sum plan (no single-partition window
   * over data-scale frames).
   */
-object QueriesWave10 {
+object QueriesWave10 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
@@ -571,13 +571,7 @@ object QueriesWave10 {
     * each IV term to 1e-12 before the ≤#sources-row sums.
     */
   def woeIvQ(spark: SparkSession, dir: String): DataFrame = {
-    val rates = Memo(spark, dir, "wave9:srcPassRates")(
-      operators.Corpus.docFilter(Tables(spark, dir, "documents"))
-        .join(Tables(spark, dir, "documents").select(col("doc_id"), col("source")),
-          "doc_id")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("kept"), 1L).otherwise(0L)).as("k")))
+    val rates = SharedFrames.srcPassRates(spark, dir)
     val tot = rates.agg(sum(col("k")).as("gg"), sum(col("n") - col("k")).as("bb"),
       count(lit(1)).as("s"))
     val terms = rates.crossJoin(broadcast(tot))
@@ -647,13 +641,7 @@ object QueriesWave10 {
     */
   private def sigLanes(spark: SparkSession, dir: String): DataFrame =
     Memo(spark, dir, "wave10:sigLanes") {
-      val e = Memo(spark, dir, "graph:nationEdges")(
-        Tables(spark, dir, "lineitem")
-          .join(Tables(spark, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-          .join(Tables(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
-          .join(broadcast(Tables(spark, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-          .groupBy(col("c_nationkey").as("u"), col("s_nationkey").as("v"))
-          .agg(count(lit(1)).as("w")))
+      val e = SharedFrames.nationEdges(spark, dir)
       val sym = e.filter(col("u") =!= col("v"))
         .select(least(col("u"), col("v")).cast("long").as("a"),
           greatest(col("u"), col("v")).cast("long").as("b"), col("w"))
@@ -1292,13 +1280,7 @@ object QueriesWave10 {
     * document rate over the corpus span. Bounded #sources-row frame.
     */
   def abPowerPlanQ(spark: SparkSession, dir: String): DataFrame = {
-    val rates = Memo(spark, dir, "wave9:srcPassRates")(
-      operators.Corpus.docFilter(Tables(spark, dir, "documents"))
-        .join(Tables(spark, dir, "documents").select(col("doc_id"), col("source")),
-          "doc_id")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("kept"), 1L).otherwise(0L)).as("k")))
+    val rates = SharedFrames.srcPassRates(spark, dir)
     rates
       .withColumn("p1", col("k").cast("double") / col("n").cast("double"))
       .withColumn("p2", least(col("p1") + lit(abMde), lit(1.0)))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * wave; every input frame is a session memo, so nothing rescans the
   * corpus.
   */
-object QueriesWave11 {
+object QueriesWave11 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 

@@ -9,16 +9,9 @@ import org.apache.spark.sql.functions._
   * q20) adapted to the partsupp-less schema. Exact integer arithmetic
   * on calendar-bounded frames throughout.
   */
-object QueriesWave12 {
+object QueriesWave12 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
-
-  /** The per-day event-count frame shared with page_hinkley/cusum. */
-  private def daily(spark: SparkSession, dir: String): DataFrame =
-    Memo(spark, dir, "wave6:dailyEvents")(
-      Tables(spark, dir, "events")
-        .groupBy(expr("unix_micros(date_trunc('DAY', ts))").as("day_us"))
-        .agg(count(lit(1)).as("n")))
 
   private val dayUs = 86400000000L
 
@@ -39,7 +32,7 @@ object QueriesWave12 {
     */
   def rollingOriginBacktestQ(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val d = daily(spark, dir)
+    val d = SharedFrames.dailyEvents(spark, dir)
     val span = d.agg(min(col("day_us")).as("d0"), max(col("day_us")).as("d1"))
     val lagged = d
       .join(d.select((col("day_us") + lit(7L * dayUs)).as("day_us"),
@@ -119,7 +112,7 @@ object QueriesWave12 {
     */
   def conformalIntervalQ(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = daily(spark, dir)
+    val d = SharedFrames.dailyEvents(spark, dir)
     val span = d.agg(min(col("day_us")).as("d0"), max(col("day_us")).as("d1"))
     val lagged = d
       .join(d.select((col("day_us") + lit(7L * dayUs)).as("day_us"),

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * has to cast to double bit-identically (DuckDB's int128→double cast
   * is not correctly rounded — see hhi_index).
   */
-object QueriesWave13 {
+object QueriesWave13 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 

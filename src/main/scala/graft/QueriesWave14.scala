@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * parity rules as every wave: quantize each division/√ once, keep
   * every sum an integer, and never cast a >2^53 integer to double.
   */
-object QueriesWave14 {
+object QueriesWave14 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
@@ -237,10 +237,7 @@ object QueriesWave14 {
     */
   def extremeValuePotQ(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = Memo(spark, dir, "wave6:dailyEvents")(
-      Tables(spark, dir, "events")
-        .groupBy(expr("unix_micros(date_trunc('DAY', ts))").as("day_us"))
-        .agg(count(lit(1)).as("n")))
+    val d = SharedFrames.dailyEvents(spark, dir)
     val nd = d.agg(count(lit(1)).as("ndays"))
     val u = d.crossJoin(broadcast(nd))
       .withColumn("__rk", row_number().over(Window.orderBy(col("n"), col("day_us"))))
@@ -302,10 +299,7 @@ object QueriesWave14 {
     * Q term integer-rounded at 1e-12 before the 7-row sum.
     */
   def ljungBoxQ(spark: SparkSession, dir: String): DataFrame = {
-    val d = Memo(spark, dir, "wave6:dailyEvents")(
-      Tables(spark, dir, "events")
-        .groupBy(expr("unix_micros(date_trunc('DAY', ts))").as("day_us"))
-        .agg(count(lit(1)).as("n")))
+    val d = SharedFrames.dailyEvents(spark, dir)
     val nd = d.agg(count(lit(1)).as("ndays"))
     val lags = spark.range(1L, lbLags + 1L).select(col("id").as("lag"))
     val rho = d.select(col("day_us"), col("n").as("x")).crossJoin(broadcast(lags))

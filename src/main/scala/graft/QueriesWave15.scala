@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * discrete-time churn hazard curve, and weekly event-mix entropy.
   * Quantized-transcendental parity discipline throughout.
   */
-object QueriesWave15 {
+object QueriesWave15 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
   private val dayUs = 86400000000L

@@ -9,11 +9,35 @@ import org.apache.spark.sql.functions._
   * gate. Exact integers on bounded frames; min-label components reuse
   * the Pregel operator and the recursive-CTE oracle.
   */
-object QueriesWave16 {
+object QueriesWave16 extends QueryModule {
 
   private val dayUs = 86400000000L
 
   // ---- binseg_changepoints: two-level binary segmentation ----
+
+  /** Per segment of `seg`, the day maximizing |n·prefix − rank·T| over
+    * the (day_us, x) series, with its score: binary segmentation's cut
+    * statistic. Segments with fewer than 4 days find no cut.
+    */
+  private[graft] def argmaxCusum(df: DataFrame, seg: Column): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(seg)
+    val cum = df
+      .withColumn("__seg", seg)
+      .withColumn("__n", count(lit(1)).over(w))
+      .withColumn("__t", sum(col("x")).over(w))
+      .withColumn("__rk", row_number().over(w.orderBy(col("day_us"))))
+      .withColumn("__pre", sum(col("x")).over(
+        w.orderBy(col("day_us")).rowsBetween(Window.unboundedPreceding, 0)))
+      .withColumn("__d", col("__n") * col("__pre") - col("__rk") * col("__t"))
+    cum
+      .withColumn("__r",
+        row_number().over(Window.partitionBy(col("__seg"))
+          .orderBy(abs(col("__d")).desc, col("day_us"))))
+      .filter(col("__r") === 1 && col("__n") >= 4)
+      .select(col("__seg").as("segment"), col("day_us"),
+        abs(col("__d")).as("score"))
+  }
 
   /** Binary segmentation (the classic hierarchical changepoint
     * recursion, here unrolled two levels → up to 3 changepoints): the
@@ -26,31 +50,8 @@ object QueriesWave16 {
     * day, score.
     */
   def binsegChangepointsQ(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val daily = Memo(spark, dir, "wave7:dailyOrdersRev")(
-      Tables(spark, dir, "orders")
-        .groupBy(expr("unix_micros(date_trunc('DAY', o_orderdate))").as("day_us"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")).as("x")))
-    def argmaxCusum(df: DataFrame, seg: Column): DataFrame = {
-      val w = Window.partitionBy(seg)
-      val cum = df
-        .withColumn("__seg", seg)
-        .withColumn("__n", count(lit(1)).over(w))
-        .withColumn("__t", sum(col("x")).over(w))
-        .withColumn("__rk", row_number().over(w.orderBy(col("day_us"))))
-        .withColumn("__pre", sum(col("x")).over(
-          w.orderBy(col("day_us")).rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("__d", col("__n") * col("__pre") - col("__rk") * col("__t"))
-      cum
-        .withColumn("__r",
-          row_number().over(Window.partitionBy(col("__seg"))
-            .orderBy(abs(col("__d")).desc, col("day_us"))))
-        .filter(col("__r") === 1 && col("__n") >= 4)
-        .select(col("__seg").as("segment"), col("day_us"),
-          abs(col("__d")).as("score"))
-    }
-    val l1 = Memo(spark, dir, "wave16:binsegL1")(
-      argmaxCusum(daily, lit("all")))
+    val daily = SharedFrames.dailyOrdersRev(spark, dir)
+    val l1 = SharedFrames.binsegL1(spark, dir)
     val cut1 = l1.select(col("day_us").as("__cut"))
     val l2 = argmaxCusum(
       daily.crossJoin(broadcast(cut1)),

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * deciles, and a counting Bloom filter with delete support. Exact
   * integers; one quantized transcendental per output number.
   */
-object QueriesWave17 {
+object QueriesWave17 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 

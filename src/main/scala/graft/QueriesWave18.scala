@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * and the max-drawdown path statistic. Exact moments, quantized
   * transcendentals, calendar-bounded frames.
   */
-object QueriesWave18 {
+object QueriesWave18 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
@@ -175,10 +175,7 @@ object QueriesWave18 {
     */
   def maxDrawdownQ(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = Memo(spark, dir, "wave7:dailyOrdersRev")(
-      Tables(spark, dir, "orders")
-        .groupBy(expr("unix_micros(date_trunc('DAY', o_orderdate))").as("day_us"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")).as("x")))
+    val daily = SharedFrames.dailyOrdersRev(spark, dir)
     val w = Window.orderBy(col("day_us")).rowsBetween(Window.unboundedPreceding, 0)
     val path = daily
       .withColumn("cum", sum(col("x")).over(w))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * (Kendall τ-b), segmented trend fits around the detected
   * changepoint, and autocorrelation-adjusted effective sample size.
   */
-object QueriesWave19 {
+object QueriesWave19 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
   private val dayUs = 86400000000L
@@ -99,28 +99,8 @@ object QueriesWave19 {
     */
   def segmentedTrendQ(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = Memo(spark, dir, "wave7:dailyOrdersRev")(
-      Tables(spark, dir, "orders")
-        .groupBy(expr("unix_micros(date_trunc('DAY', o_orderdate))").as("day_us"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")).as("x")))
-    val cut = Memo(spark, dir, "wave16:binsegL1")(
-      // same statistic as binseg_changepoints' level 1 — shared memo tag
-      {
-        val w = Window.partitionBy(lit("all"))
-        daily
-          .withColumn("__seg", lit("all"))
-          .withColumn("__n", count(lit(1)).over(w))
-          .withColumn("__t", sum(col("x")).over(w))
-          .withColumn("__rk", row_number().over(w.orderBy(col("day_us"))))
-          .withColumn("__pre", sum(col("x")).over(
-            w.orderBy(col("day_us")).rowsBetween(Window.unboundedPreceding, 0)))
-          .withColumn("__d", col("__n") * col("__pre") - col("__rk") * col("__t"))
-          .withColumn("__r",
-            row_number().over(Window.partitionBy(col("__seg"))
-              .orderBy(abs(col("__d")).desc, col("day_us"))))
-          .filter(col("__r") === 1 && col("__n") >= 4)
-          .select(col("__seg").as("segment"), col("day_us"), abs(col("__d")).as("score"))
-      })
+    val daily = SharedFrames.dailyOrdersRev(spark, dir)
+    val cut = SharedFrames.binsegL1(spark, dir)
     val seg = daily.crossJoin(broadcast(cut.select(col("day_us").as("__cut"))))
       .withColumn("segment",
         when(col("day_us") <= col("__cut"), lit("left")).otherwise(lit("right")))
@@ -184,10 +164,7 @@ object QueriesWave19 {
     * frame.
     */
   def essAutocorrQ(spark: SparkSession, dir: String): DataFrame = {
-    val d = Memo(spark, dir, "wave6:dailyEvents")(
-      Tables(spark, dir, "events")
-        .groupBy(expr("unix_micros(date_trunc('DAY', ts))").as("day_us"))
-        .agg(count(lit(1)).as("n")))
+    val d = SharedFrames.dailyEvents(spark, dir)
     val nd = d.agg(count(lit(1)).as("ndays"))
     val lags = spark.range(1L, essLags + 1L).select(col("id").as("lag"))
     val rho = d.select(col("day_us"), col("n").as("x")).crossJoin(broadcast(lags))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * MMD² drift between sources, and Gumbel-key weighted
   * without-replacement sampling per source.
   */
-object QueriesWave20 {
+object QueriesWave20 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
@@ -27,9 +27,7 @@ object QueriesWave20 {
     * 1-row literal checkpoint.
     */
   def lshPrecisionAuditQ(spark: SparkSession, dir: String): DataFrame = {
-    val cand = Memo(spark, dir, "wave9:lshCand")(
-      QueriesText.lshCands(spark, dir)
-        .select(col("doc_a"), col("doc_b")))
+    val cand = SharedFrames.lshCand(spark, dir)
     val ver = QueriesText.lshPairs(spark, dir)
     Memo(spark, dir, "wave20:lshPrecRow") {
       import spark.implicits._

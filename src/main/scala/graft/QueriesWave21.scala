@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * sampling step that makes clustering 100 TB of embeddings a
   * driver-sized problem.
   */
-object QueriesWave21 {
+object QueriesWave21 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * screens (Benjamini–Hochberg), plus scale-planning and analytics
   * operators in the same portable-grid discipline as every wave.
   */
-object QueriesWave22 {
+object QueriesWave22 extends QueryModule {
 
   // ---- bh_fdr: Benjamini–Hochberg FDR over the source-pair z-tests ----
 

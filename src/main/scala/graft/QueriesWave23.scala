@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   * the estimator costs one scan + broadcast-sized algebra, exactly like
   * the reference's stats-table build.
   */
-object QueriesWave23 {
+object QueriesWave23 extends QueryModule {
 
   /** fact_threshold = 6 bits (common.py:138): o_custkey's dictionary
     * (ndv ≈ 1.5k·sf·100) factorizes into ≥2 subcolumns at every test

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * point BIGINT grids, and data-scale cumulative counts via the
   * range-partitioned prefix plan (never a single global window).
   */
-object QueriesWave24 {
+object QueriesWave24 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * every wave: exact integers / fixed-order doubles, 2^20 / 1e-9
   * grids around the few libm calls, md5 for every seeded draw.
   */
-object QueriesWave25 {
+object QueriesWave25 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 

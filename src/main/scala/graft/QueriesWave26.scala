@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * fixed-order doubles, per-bin responsibilities on the 1e-6 grid
   * around the one libm exp, md5 for seeded draws.
   */
-object QueriesWave26 {
+object QueriesWave26 extends QueryModule {
 
   private def md5Long(c: Column): Column =
     conv(substring(md5(c), 1, 13), 16, 10).cast("long")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * completing the classical-test family. House portability rules
   * throughout.
   */
-object QueriesWave27 {
+object QueriesWave27 extends QueryModule {
 
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * embedding outliers against the label centroids (the data-quality
   * leg of the centroid family). Portability discipline unchanged.
   */
-object QueriesWave28 {
+object QueriesWave28 extends QueryModule {
 
   private def dec(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     c.cast("decimal(38,0)")

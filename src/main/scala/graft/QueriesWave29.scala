@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * TEST the fit), and the duplication × quality association (are
   * near-duplicates lower-quality documents?) with a Woolf interval.
   */
-object QueriesWave29 {
+object QueriesWave29 extends QueryModule {
 
   // ---- mixture_gof: chi-squared test of the em_mixture fit ----
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * of translation-data pipelines), run through the IVF index like
   * every other similarity leg.
   */
-object QueriesWave30 {
+object QueriesWave30 extends QueryModule {
 
   /** Margin kNN depth (the k of the Artetxe–Schwenk margin score). */
   val bmK = 4

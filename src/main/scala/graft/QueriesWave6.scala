@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * grids (integer cents, 1e-6 fixed point, 2^52 md5 uniforms,
   * truncating integer division) so the DuckDB oracle hash-matches.
   */
-object QueriesWave6 {
+object QueriesWave6 extends QueryModule {
 
   private val usPerDay = 86400000000L
 
@@ -292,10 +292,7 @@ object QueriesWave6 {
   def autocorrQ(spark: SparkSession, dir: String): DataFrame = {
     // both lag-join sides read the same calendar-bounded series — one
     // events scan per session, not two per plan
-    val daily = Memo(spark, dir, "wave6:dailyEvents")(
-      Tables(spark, dir, "events")
-        .groupBy(expr("unix_micros(date_trunc('DAY', ts))").as("day_us"))
-        .agg(count(lit(1)).as("n")))
+    val daily = SharedFrames.dailyEvents(spark, dir)
     val lags = spark.range(1L, acfMaxLag + 1L).select(col("id").as("lag"))
     daily.select(col("day_us"), col("n").as("x")).crossJoin(lags)
       .join(daily.select(col("day_us").as("__bd"), col("n").as("y")),

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * fixed point, md5-derived hashes, truncating integer division) so the
   * DuckDB oracle hash-matches.
   */
-object QueriesWave7 {
+object QueriesWave7 extends QueryModule {
 
   private val usPerDay = 86400000000L
 
@@ -408,10 +408,7 @@ object QueriesWave7 {
     import org.apache.spark.sql.expressions.Window
     // memoized: the peak argmax and the output both read this frame —
     // one orders scan, not two
-    val daily = Memo(spark, dir, "wave7:dailyOrdersRev")(
-      Tables(spark, dir, "orders")
-        .groupBy(expr("unix_micros(date_trunc('DAY', o_orderdate))").as("day_us"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")).as("x")))
+    val daily = SharedFrames.dailyOrdersRev(spark, dir)
     val tot = daily.agg(count(lit(1)).as("n"), sum(col("x")).as("t"))
     val cum = daily.crossJoin(broadcast(tot))
       .withColumn("rk", row_number().over(Window.orderBy(col("day_us"))))
@@ -526,10 +523,7 @@ object QueriesWave7 {
     * agg touches ≤ #days rows.
     */
   def saxSymbolsQ(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Memo(spark, dir, "wave6:dailyEvents")(
-      Tables(spark, dir, "events")
-        .groupBy(expr("unix_micros(date_trunc('DAY', ts))").as("day_us"))
-        .agg(count(lit(1)).as("n")))
+    val daily = SharedFrames.dailyEvents(spark, dir)
     val tot = daily.agg(
       min(col("day_us")).as("d0"), count(lit(1)).as("nn"),
       sum(col("n")).as("t"), sum(col("n") * col("n")).as("sxx"))
@@ -716,13 +710,7 @@ object QueriesWave7 {
     */
   def salsaScoresQ(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = Memo(spark, dir, "graph:nationEdges")(
-      Tables(spark, dir, "lineitem")
-        .join(Tables(spark, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables(spark, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("c_nationkey").as("u"), col("s_nationkey").as("v"))
-        .agg(count(lit(1)).as("w")))
+    val e = SharedFrames.nationEdges(spark, dir)
     val pa = Memo(spark, dir, "wave7:salsaPa")(
       e.withColumn("od", sum(col("w")).over(Window.partitionBy(col("u"))))
         .select(col("u"), col("v"),

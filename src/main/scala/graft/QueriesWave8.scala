@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * hashes/signs, truncating integer division) so the DuckDB oracle
   * hash-matches bit for bit.
   */
-object QueriesWave8 {
+object QueriesWave8 extends QueryModule {
 
   private val usPerDay = 86400000000L
 
@@ -252,10 +252,7 @@ object QueriesWave8 {
     * in corpus size; only the one-pass daily aggregate touches facts.
     */
   private[graft] def tsPairs(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Memo(spark, dir, "wave7:dailyOrdersRev")(
-      Tables(spark, dir, "orders")
-        .groupBy(expr("unix_micros(date_trunc('DAY', o_orderdate))").as("day_us"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")).as("x")))
+    val daily = SharedFrames.dailyOrdersRev(spark, dir)
     Memo(spark, dir, "wave8:tsPairs") {
       val d0 = daily.agg(min(col("day_us")).as("d0"))
       val idx = daily.crossJoin(broadcast(d0))
@@ -400,10 +397,7 @@ object QueriesWave8 {
     val pairs = tsPairs(spark, dir)
     val slope = rankLocate(pairs, "s6", expr("(__p + 1) div 2"))
       .select(col("value").as("__slope6"))
-    val daily = Memo(spark, dir, "wave7:dailyOrdersRev")(
-      Tables(spark, dir, "orders")
-        .groupBy(expr("unix_micros(date_trunc('DAY', o_orderdate))").as("day_us"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")).as("x")))
+    val daily = SharedFrames.dailyOrdersRev(spark, dir)
     val d0 = daily.agg(min(col("day_us")).as("d0"))
     val resid = daily.crossJoin(broadcast(d0)).crossJoin(broadcast(slope))
       .select((col("x") * 1000000L -
@@ -467,10 +461,7 @@ object QueriesWave8 {
     val pairs = tsPairs(spark, dir)
     val s = pairs.agg(
       sum(when(col("dy") > 0, 1L).when(col("dy") < 0, -1L).otherwise(0L)).as("s_stat"))
-    val daily = Memo(spark, dir, "wave7:dailyOrdersRev")(
-      Tables(spark, dir, "orders")
-        .groupBy(expr("unix_micros(date_trunc('DAY', o_orderdate))").as("day_us"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")).as("x")))
+    val daily = SharedFrames.dailyOrdersRev(spark, dir)
     val ties = daily.groupBy(col("x")).agg(count(lit(1)).as("t"))
       .agg(count(lit(1)).as("__nv"),
         sum(col("t")).as("n_days"),
@@ -928,10 +919,7 @@ object QueriesWave8 {
     */
   def hurstExponentQ(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = Memo(spark, dir, "wave7:dailyOrdersRev")(
-      Tables(spark, dir, "orders")
-        .groupBy(expr("unix_micros(date_trunc('DAY', o_orderdate))").as("day_us"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")).as("x")))
+    val daily = SharedFrames.dailyOrdersRev(spark, dir)
     val ranked = Memo(spark, dir, "wave8:dailyRankedRev")(
       daily.withColumn("rk0",
         row_number().over(Window.orderBy(col("day_us"))).cast("long") - 1))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * deterministic multi-epoch shuffle plan, and k-core membership on
   * the trade graph. Same portable-grid discipline as every wave.
   */
-object QueriesWave9 {
+object QueriesWave9 extends QueryModule {
 
   // ---- chao1_est: Chao1 richness estimator from the shared sample ----
 
@@ -248,9 +248,7 @@ object QueriesWave9 {
       .select(col("doc_a"), col("doc_b"))
     // the band join recomputes per consumer otherwise — three aggregates
     // read it here, so pin the collapsed candidate pairs once
-    val cand = Memo(spark, dir, "wave9:lshCand")(
-      QueriesText.lshCands(spark, dir)
-        .select(col("doc_a"), col("doc_b")))
+    val cand = SharedFrames.lshCand(spark, dir)
     val hit = exact.join(cand, Seq("doc_a", "doc_b"), "left_semi")
     Memo(spark, dir, "wave9:lshRecallRow") {
       import exact.sparkSession.implicits._
@@ -356,13 +354,7 @@ object QueriesWave9 {
     * label propagation; the directed weighted edges are the session's
     * `graph:nationEdges` memo. */
   private[graft] def nationUndirected(spark: SparkSession, dir: String): DataFrame = {
-    val e = Memo(spark, dir, "graph:nationEdges")(
-      Tables(spark, dir, "lineitem")
-        .join(Tables(spark, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables(spark, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("c_nationkey").as("u"), col("s_nationkey").as("v"))
-        .agg(count(lit(1)).as("w")))
+    val e = SharedFrames.nationEdges(spark, dir)
     Memo(spark, dir, "wave9:nationUndirected")(
       e.select(col("u").cast("long").as("a"), col("v").cast("long").as("b"))
         .unionAll(e.select(col("v").cast("long").as("a"), col("u").cast("long").as("b")))
@@ -481,13 +473,7 @@ object QueriesWave9 {
     * pairwise stage touches a 20-row frame.
     */
   def propZtestPairsQ(spark: SparkSession, dir: String): DataFrame = {
-    val rates = Memo(spark, dir, "wave9:srcPassRates")(
-      graft.operators.Corpus.docFilter(Tables(spark, dir, "documents"))
-        .join(Tables(spark, dir, "documents").select(col("doc_id"), col("source")),
-          "doc_id")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("kept"), 1L).otherwise(0L)).as("k")))
+    val rates = SharedFrames.srcPassRates(spark, dir)
     val a = rates.select(col("source").as("src_a"), col("n").as("n1"), col("k").as("k1"))
     val b = rates.select(col("source").as("src_b"), col("n").as("n2"), col("k").as("k2"))
     a.join(b, col("src_a") < col("src_b"))
@@ -594,10 +580,7 @@ object QueriesWave9 {
     * alarm day marker. */
   def pageHinkleyQ(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = Memo(spark, dir, "wave6:dailyEvents")(
-      Tables(spark, dir, "events")
-        .groupBy(expr("unix_micros(date_trunc('DAY', ts))").as("day_us"))
-        .agg(count(lit(1)).as("n")))
+    val daily = SharedFrames.dailyEvents(spark, dir)
     val tot = daily.agg(count(lit(1)).as("nn"), sum(col("n")).as("t"))
     val w = Window.orderBy(col("day_us"))
     val cum = daily.crossJoin(broadcast(tot))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-ladder evidence for the 100 TB posture (SCALE_LADDER.json):
@@ -51,18 +51,7 @@ object ScaleLadder {
     val workRoot = if (args.length > 1) args(1) else "/tmp/graft_scale"
     val rungs = (if (args.length > 2) args(2) else "1,3,10")
       .split(',').map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // amplified fingerprints must never pollute the committed store
     Checkpoint.rootOverride = Some(s"$workRoot/ckpt")
     Memo.eagerTiming = true
@@ -218,7 +207,7 @@ object ScaleLadder {
       s"""{"src":"$src","rungs":${rungs.mkString("[", ",", "]")},""" +
         rungJsons.map { case (k, j) => s""""x$k":$j""" }.mkString("", ",", ",") +
         s""""growth_exponents_low_to_high":$expJson,""" +
-        s""""note":"alpha = log(count_hi/count_lo)/log(n_docs_hi/n_docs_lo). CONTRACT per class: content-blocked families (corpus-sized key spaces) must hold alpha ~ 1; domain-fraction families (fixed key spaces: 16-bit simhash/dHash bands, label partitions, IVF probe budgets) must hold FLAT selectivity at their analytic floor (simhash ~4/2^16, knn labels 1/10, hard negatives ~nProbe/nCells) — alpha ~ 2 at constant tiny selectivity is their expected shape, bounded at deploy scale by sharded dedup partitions + the hot-bucket re-split. bitext_eval_sample must stay pinned at its fixed count. Text is remapped to the natural-entropy vocabulary regime on every rung (see Amplify) so rungs compare like with like; query timings are one warm + min of two timed passes on local[32]."}"""
+        s""""note":"alpha = log(count_hi/count_lo)/log(n_docs_hi/n_docs_lo). CONTRACT per class: content-blocked families (corpus-sized key spaces) must hold alpha ~ 1; domain-fraction families (fixed key spaces: 16-bit simhash/dHash bands, label partitions, IVF probe budgets) must hold FLAT selectivity at their analytic floor (simhash ~4/2^16, knn labels 1/10, hard negatives ~nProbe/nCells) — alpha ~ 2 at constant tiny selectivity is their expected shape, bounded at deploy scale by sharded dedup partitions + the hot-bucket re-split. bitext_eval_sample must stay pinned at its fixed count. Text is remapped to the natural-entropy vocabulary regime on every rung (see Amplify) so rungs compare like with like; query timings are one warm + min of two timed passes on local[cores]."}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get("SCALE_LADDER.json"),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))

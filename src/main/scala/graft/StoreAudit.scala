@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Full-store stale-artifact audit (the CheckpointSpec rebuild-diff
   * extended to EVERY committed key, including the sf0.1 keys only the
   * bench serves): for each dataset directory named by a committed
@@ -20,17 +18,7 @@ object StoreAudit {
     val tdRoot = if (args.nonEmpty) args(0) else "/root/testdata"
     val committedRoot =
       new java.io.File("models/graft_ckpt", Checkpoint.schemaVersion)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val dsDirs = Option(committedRoot.listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory).map(_.getName).sorted
@@ -42,7 +30,16 @@ object StoreAudit {
     val report = new StringBuilder
     var bad = 0
     try {
-      for (ds <- datasets) {
+      // a committed key whose dataset is gone cannot be rebuilt: name it
+      // and fail the audit rather than abort the loop mid-report
+      val (present, orphaned) =
+        datasets.partition(ds => new java.io.File(s"$tdRoot/$ds").isDirectory)
+      for (ds <- orphaned) {
+        bad += 1
+        report.append(s"""${if (report.nonEmpty) "," else ""}"$ds":{"missing_dataset_dir":"$tdRoot/$ds"}""")
+        println(s"[store-audit] $ds: no dataset dir under $tdRoot")
+      }
+      for (ds <- present) {
         val dir = s"$tdRoot/$ds"
         val s = spark.newSession()
         // model_store's catalog live-probes every artifact → rebuilds

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,37 +8,14 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local fast loop)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // The bounded top-k AGGREGATES (TopKPairs) keep <= k-entry
-      // buffers per group; the default ObjectHashAggregate fallback
-      // threshold (128 in-memory groups per partition) would push them
-      // back into a per-partition SORT -- exactly the input-sized sort
-      // the aggregate replaces. 128k groups x ~100 B buffer is ~13 MB
-      // per partition: hash aggregation stays safe at any scale, and
-      // the knob stays env-tunable for cluster profiles.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJAGG_GROUPS", "131072"))
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same deep-memo lineage cut as Bench: cheaper per-consumer
-    // re-analysis; results are identical (same materialized rows)
-    Memo.lineageCut = true
+    val cores = GraftSession.defaultCores
+    val spark = GraftSession(cores)
     new java.io.File(outDir).mkdirs()
     // Correctness dump is order-independent (one output dir per query)
-    // — run queries on a small concurrent pool (guide §2.6) so the
+    // — run one query per core concurrently (guide §2.6) so the
     // 406-query dump isn't a sequential latency sum. Memo/Checkpoint
     // builds are per-key locked; per-query results are unchanged.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      sys.env.getOrElse("SPARK_GRAFT_WARM_THREADS", "8").toInt)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(cores)
     try {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)

@@ -6,6 +6,14 @@ class EntrySpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("a query key defined by two modules is an error naming both") {
+    val e = intercept[IllegalStateException](SparkEntry.merged(Seq(
+      "ModA" -> Map("q" -> 1, "a" -> 2), "ModB" -> Map("b" -> 3, "q" -> 4))))
+    assert(e.getMessage.contains("'q'") && e.getMessage.contains("ModA") &&
+      e.getMessage.contains("ModB"), e.getMessage)
+    assert(SparkEntry.queries.size == SparkEntry.modules.map(_.queries.size).sum)
+  }
+
   test("every oracleSql key has a queries entry") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")

@@ -16,6 +16,12 @@ class SketchSpec extends SparkSpec {
     }
   }
 
+  test("kmv_ndv accepts only integral columns (exact_ndv counts their string forms)") {
+    val e = intercept[IllegalArgumentException](
+      QueriesStats.kmvNdv(spark, sf, Seq(("orders", "o_totalprice"))))
+    assert(e.getMessage.contains("orders.o_totalprice is double"), e.getMessage)
+  }
+
   test("bloom_filter: no false negatives, positives = exact + false") {
     val m = QueriesStats.bloomFilterQ(spark, sf).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
