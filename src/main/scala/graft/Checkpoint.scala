@@ -214,67 +214,23 @@ object Checkpoint {
       s"(((($acc * 1000003 + (SELECT COUNT(*) FROM $t)) % $fingerprintMod)" +
         s" * 1000003 + (SELECT v FROM __chk_$t)) % $fingerprintMod)")
 
-  /** Session-level cache of loaded artifact frames: every consumer of
-    * a given (session, artifact path) shares ONE read relation — the
-    * footer read and schema inference happen once per session, not
-    * once per query that touches the artifact. (Most callers also
-    * wrap the result in a [[Memo]]; this covers the ones that don't,
-    * e.g. the model_store catalog's live probes.)
-    *
-    * WEAK on both axes: a long-lived multi-session service must not
-    * leak an entry per retired session. The outer key is weak, and the
-    * inner DataFrames are held through WeakReferences too — a cached
-    * DataFrame strongly references its own SparkSession, so a strong
-    * value would resurrect the weak key and the entry would never
-    * collect. The price is that an entry whose DataFrame nothing else
-    * currently references can be GC'd and later re-read (one parquet
-    * footer read) — correctness is unaffected.
-    * Caveat (by design, same as any cached read relation): the cached
-    * plan pins the artifact's file listing, so a DIFFERENT process
-    * rewriting an artifact directory under a live session leaves this
-    * cache pointing at deleted part files — cross-process artifact
-    * rewrites require a fresh session (the documented concurrent-sbt
-    * hazard). In-process rebuilds invalidate via [[apply]]. */
-  private val loaded = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, java.lang.ref.WeakReference[DataFrame]]]())
-
-  private def sessionLoaded(spark: SparkSession) = loaded.synchronized {
-    var m = loaded.get(spark)
-    if (m == null) {
-      m = scala.collection.concurrent
-        .TrieMap[String, java.lang.ref.WeakReference[DataFrame]]()
-      loaded.put(spark, m)
-    }
-    m
-  }
-
-  private def cachedRead(spark: SparkSession, path: String): DataFrame = {
-    val m = sessionLoaded(spark)
-    m.get(path).flatMap(r => Option(r.get)).getOrElse {
-      val df = spark.read.parquet(path)
-      m.put(path, new java.lang.ref.WeakReference(df))
-      df
-    }
-  }
-
-  /** Test seam: number of sessions currently holding cached artifact
-    * reads (weak — retired sessions disappear after GC). */
-  private[graft] def loadedSessionCount: Int =
-    loaded.synchronized { loaded.size }
-
-  /** Serve `name` from the warehouse if present; otherwise run `build`
-    * (counted as a training run), persist its result, and serve the
-    * read-back — so downstream plans are identical on the build and
-    * load paths (always a parquet scan of the artifact, never the
-    * trainer's own plan).
-    */
   /** Per-artifact build locks (keyed by resolved path): concurrent
     * callers — the parallel warm pass — must never run two writers
     * against the same artifact directory. */
   private val buildLocks =
     scala.collection.concurrent.TrieMap[String, Object]()
 
+  /** Serve `name` from the warehouse if present; otherwise run `build`
+    * (counted as a training run), persist its result, and serve the
+    * read-back — so downstream plans are identical on the build and
+    * load paths (always a parquet scan of the artifact, never the
+    * trainer's own plan). Reads go through the session read cache
+    * ([[Tables.parquet]]), so each artifact's schema is inferred once
+    * per session; a rebuild in this process drops the stale entry. A
+    * DIFFERENT process rewriting an artifact under a live session
+    * leaves the cached plan pointing at deleted part files, so
+    * cross-process rewrites need a fresh session.
+    */
   def apply(spark: SparkSession, dir: String, name: String)(fingerprint: => Long)(
       build: => DataFrame): DataFrame = {
     val p = java.nio.file.Paths.get(
@@ -288,10 +244,10 @@ object Checkpoint {
           val t0 = System.nanoTime()
           build.write.mode("overwrite").parquet(p.toString)
           buildSecs.put((dir, name), (System.nanoTime() - t0) / 1e9)
-          sessionLoaded(spark).remove(p.toString)
+          Tables.forget(spark, p.toString)
         }
       }
     }
-    cachedRead(spark, p.toString)
+    Tables.parquet(spark, p.toString)(identity)
   }
 }

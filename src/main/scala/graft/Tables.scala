@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+
+import scala.collection.concurrent.TrieMap
 
 /** Parquet table loader for the TESTDATA.md layout: one parquet per table
   * under an sf directory. At cluster scale the same API points at a
@@ -31,58 +35,65 @@ object Tables {
     "embeddings" -> Seq("vec_id")
   )
 
-  /** Session-level cache of base-table read relations: one listing +
-    * footer/schema read per (session, dir, table) instead of one per
-    * QUERY that touches the table. Profiled at sf0.1/local[32]: the 406
-    * bench queries spend 43.7 s of their 161 s total in driver-side
-    * DataFrame construction, a large part of it re-running
-    * `spark.read.parquet` (file listing + schema inference + analysis
-    * of a fresh relation) for the same ten tables hundreds of times.
-    * The cached object is the unexecuted READ PLAN — no data or results
-    * are cached; every action still computes from the parquet inputs.
-    * Weak on both axes (same discipline as Checkpoint.loaded): a
-    * retired session's entries must be collectable, and a DataFrame
-    * strongly references its session, so values are WeakReferences.
-    * Caveat (same as any cached read relation, e.g. Checkpoint's): a
-    * process that OVERWRITES `$dir/$name.parquet` under a live session
-    * must use a fresh session (or dir) for the re-read — every test
-    * writes each dataset once into a fresh temp dir, and TESTDATA is
-    * read-only.
+  /** One cached read: the served frame and its raw parquet schema. */
+  private final case class Read(frame: java.lang.ref.WeakReference[DataFrame], raw: StructType)
+
+  /** Session-level read cache for every parquet input: the base tables
+    * served by [[apply]] and the model-store artifacts served by
+    * [[Checkpoint]]. The cached object is the unexecuted READ PLAN; no
+    * data or results are cached, and every action still computes from
+    * the parquet files.
+    *
+    * Each entry holds the served frame WEAKLY and the raw parquet
+    * schema (before `fixups`) STRONGLY. A DataFrame references its
+    * session, so a strong frame would pin retired sessions through the
+    * weak session key; a StructType references nothing. While the frame
+    * is live, every caller gets that same object. Once GC has collected
+    * it (in practice between almost every pair of ops), the next call
+    * re-reads with the remembered schema: a file listing and a fresh
+    * relation, but no schema-inference Spark job.
+    *
+    * Caveat (same as any cached read relation): a process that
+    * OVERWRITES a cached path under a live session must use a fresh
+    * session or drop the entry with [[forget]] (Checkpoint does on
+    * rebuild). Every test writes each dataset once into a fresh temp
+    * dir, and TESTDATA is read-only.
     */
-  private val loaded = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, String), java.lang.ref.WeakReference[DataFrame]]]())
+  private val reads = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, TrieMap[String, Read]]())
 
-  private def sessionLoaded(spark: SparkSession) = loaded.synchronized {
-    var m = loaded.get(spark)
-    if (m == null) {
-      m = scala.collection.concurrent
-        .TrieMap[(String, String), java.lang.ref.WeakReference[DataFrame]]()
-      loaded.put(spark, m)
-    }
-    m
-  }
+  private def sessionReads(spark: SparkSession): TrieMap[String, Read] =
+    reads.computeIfAbsent(spark, _ => TrieMap[String, Read]())
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val m = sessionLoaded(spark)
-    m.get((dir, name)).flatMap(r => Option(r.get)).getOrElse {
-      val df = load(spark, dir, name)
-      m.put((dir, name), new java.lang.ref.WeakReference(df))
+  /** `spark.read.parquet(path)` passed through `fixups`, served from the
+    * session's read cache (see [[reads]]). */
+  def parquet(spark: SparkSession, path: String)(fixups: DataFrame => DataFrame): DataFrame = {
+    val m = sessionReads(spark)
+    val cached = m.get(path)
+    cached.flatMap(r => Option(r.frame.get)).getOrElse {
+      val read = cached.fold(spark.read)(r => spark.read.schema(r.raw)).parquet(path)
+      val df = fixups(read)
+      m.put(path, Read(new java.lang.ref.WeakReference(df), read.schema))
       df
     }
   }
 
-  private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+  /** Drops `path` from the session's read cache, so the next read
+    * infers the schema of whatever is there now. */
+  private[graft] def forget(spark: SparkSession, path: String): Unit =
+    sessionReads(spark).remove(path)
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    parquet(spark, s"$dir/$name.parquet")(timestampFixups(name))
+
+  private def timestampFixups(name: String)(df: DataFrame): DataFrame = {
     // events.ts is TIMESTAMP(NANOS) in parquet, which Spark reads only as
     // a nanos LONG (spark.sql.legacy.parquet.nanosAsLong=true, set by our
     // session builders). Truncate to micros — the same floor DuckDB's
     // ns→us conversion applies — so both engines see identical instants.
     val nanosFixed =
       if (name == "events" && df.schema("ts").dataType == LongType)
-        df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
+        df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       else df
     // Newer testdata writes timestamps as TIMESTAMP_NTZ. Our sessions pin
     // spark.sql.session.timeZone=UTC, so casting NTZ → TIMESTAMP keeps the

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Bounded exact top-k selection as an AGGREGATE — the replacement for
@@ -17,15 +18,18 @@ import org.apache.spark.sql.expressions.Aggregator
   * Selection = the k smallest (key, id) under (key asc|desc, id asc),
   * ties on key broken by id exactly like the window's ORDER BY, and
   * the output array is emitted in that order (rank i = element i+1).
-  * Scala primitive-double `==`/`<` treat -0.0 == 0.0, matching Spark's
-  * normalized float ordering; keys are never NaN in the call sites
-  * (quantized cosines of nonzero vectors).
+  * Keys compare under Spark's SQL double ordering
+  * (`SQLOrderingUtil.compareDoubles`: NaN is greatest and equals NaN,
+  * -0.0 equals 0.0), so NaN keys (the 0/0 cosine of an all-zero
+  * vector) rank exactly where the window's ORDER BY puts them.
   */
 class TopKPairs(k: Int, descKey: Boolean)
     extends Aggregator[(Double, Long), (Array[Double], Array[Long]), Seq[(Double, Long)]] {
 
-  private def lt(k1: Double, i1: Long, k2: Double, i2: Long): Boolean =
-    if (k1 != k2) { if (descKey) k1 > k2 else k1 < k2 } else i1 < i2
+  private def lt(k1: Double, i1: Long, k2: Double, i2: Long): Boolean = {
+    val c = SQLOrderingUtil.compareDoubles(k1, k2)
+    if (c != 0) { if (descKey) c > 0 else c < 0 } else i1 < i2
+  }
 
   override def zero: (Array[Double], Array[Long]) =
     (Array.empty[Double], Array.empty[Long])
