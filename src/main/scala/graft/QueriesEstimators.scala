@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Fanouts, JoinSample}
+import graft.operators.{Fanouts, JoinSample, Metrics}
 import graft.query.{CardBenchmark, Engine, Predicate, PredicateSql, PseudoSql}
 
 /** Query surface + estimators (SURVEY.md §2 rows 9-14).
@@ -61,16 +61,12 @@ object QueriesEstimators extends QueryModule {
 
   // ---- rows 10/11/13: true cardinalities, naive estimates, q-error ----
 
-  /** Session-level memo of tiny materialized frames (one-row join stats,
-    * one-row stats tables, the seeded join sample) shared across the
-    * estimator family — each spec's join tree is traversed once per
-    * (session, sf dir), not once per consuming query, exactly as a real
-    * engine materializes its stats tables once and serves every
-    * estimate from them.
-    */
-  private def memoized(spark: SparkSession, dir: String, tag: String)(
-      build: => DataFrame): DataFrame =
-    Memo(spark, dir, tag)(build)
+  // The tiny frames shared across the estimator family (one-row join
+  // stats, one-row stats tables, the seeded join sample) go through
+  // Memo: each spec's join tree is traversed once per (session, sf
+  // dir), not once per consuming query, exactly as a real engine
+  // materializes its stats tables once and serves every estimate from
+  // them.
 
   /** One-row (join size, true card) frame for a spec: its join tree is
     * traversed once, producing count(*) and the conditional count of
@@ -80,7 +76,7 @@ object QueriesEstimators extends QueryModule {
   private def bothFor(
       spark: SparkSession, dir: String, id: String,
       q: graft.query.ParsedQuery): DataFrame =
-    memoized(spark, dir, s"both:$id") {
+    Memo(spark, dir, s"both:$id") {
       val load = Fanouts.loader(spark, dir)
       val conj = Predicate.conjunction(
         q.predicates.map(p => p.copy(col = p.col.split('.').last)))
@@ -110,7 +106,7 @@ object QueriesEstimators extends QueryModule {
     * ground truth).
     */
   private[graft] def bothsAll(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "bothsAll")(
+    Memo(spark, dir, "bothsAll")(
       Checkpoint(spark, dir, "boths_all")(
         Checkpoint.tableFingerprint(spark, dir, modelEstsFpTables: _*)) {
         parsedSpecs
@@ -130,7 +126,7 @@ object QueriesEstimators extends QueryModule {
     * raw builders below only ever run inside the model_ests
     * checkpoint build. */
   private def estFrame(spark: SparkSession, dir: String, model: String): DataFrame =
-    memoized(spark, dir, s"served:$model") {
+    Memo(spark, dir, s"served:$model") {
       modelEstFrame(spark, dir)
         .filter(col("model") === model)
         .select(col("query_id"), col("est"), col("__card"))
@@ -143,14 +139,14 @@ object QueriesEstimators extends QueryModule {
     */
   private def rawEstFrame(spark: SparkSession, dir: String, model: String): DataFrame =
     if (model == "ols") olsEstFrame(spark, dir)
-    else memoized(spark, dir, s"est:$model") {
+    else Memo(spark, dir, s"est:$model") {
       val statsRow = model match {
-        case "naive" | "ebo" => memoized(spark, dir, "predStats")(predStatsRow(spark, dir))
+        case "naive" | "ebo" => Memo(spark, dir, "predStats")(predStatsRow(spark, dir))
         case "hist" =>
-          memoized(spark, dir, "modelStats:false")(modelStatsRow(eqViaMcv = false)(spark, dir))
+          Memo(spark, dir, "modelStats:false")(modelStatsRow(eqViaMcv = false)(spark, dir))
         case "mcv" =>
-          memoized(spark, dir, "modelStats:true")(modelStatsRow(eqViaMcv = true)(spark, dir))
-        case "cin" => memoized(spark, dir, "cinStats")(cinStatsRow(spark, dir))
+          Memo(spark, dir, "modelStats:true")(modelStatsRow(eqViaMcv = true)(spark, dir))
+        case "cin" => Memo(spark, dir, "cinStats")(cinStatsRow(spark, dir))
       }
       val estOf: (String, graft.query.ParsedQuery, Int) => Column = model match {
         case "naive" => (_, q, start) => naiveEstCol(q, start)
@@ -370,26 +366,6 @@ object QueriesEstimators extends QueryModule {
       }
       .mkString(s"WITH $estCtesPrelude\n", "\nUNION ALL\n", "\nORDER BY query_id")
 
-  /** calc_q_err's exact semantics (reference: scardina/run.py:60-67):
-    * true=0 ∧ est≠0 → est; est=0 ∧ true≠0 → true; both 0 → 1.0;
-    * else max(est/true, true/est). est=0 is reachable (MCV zero tail
-    * when ndv≤k, zero LIKE match counts), where plain division would
-    * yield NULL in Spark vs inf in DuckDB — a parity break and poisoned
-    * quantiles. Mirrored in [[qErrSqlOf]] so both sides agree.
-    */
-  private[graft] def qErrCol(est: Column, tru: Column): Column =
-    when(tru === 0.0 && est =!= 0.0, est)
-      .when(est === 0.0 && tru =!= 0.0, tru)
-      .when(tru === 0.0 && est === 0.0, lit(1.0))
-      .otherwise(greatest(est / tru, tru / est))
-
-  /** SQL twin of [[qErrCol]]; `est`/`tru` must be cheap references. */
-  private[graft] def qErrSqlOf(est: String, tru: String): String =
-    s"CASE WHEN $tru = 0 AND $est <> 0 THEN $est" +
-      s" WHEN $est = 0 AND $tru <> 0 THEN $tru" +
-      s" WHEN $tru = 0 AND $est = 0 THEN 1.0" +
-      s" ELSE GREATEST($est / $tru, $tru / $est) END"
-
   /** q-error of the naive estimator vs truth (calc_q_err semantics,
     * reference: scardina/run.py:60-67).
     *
@@ -405,7 +381,7 @@ object QueriesEstimators extends QueryModule {
     estFrame(spark, dir, "naive")
       .select(
         col("query_id"),
-        qErrCol(col("est"), col("__card")).as("q_err"))
+        Metrics.qError(col("est"), col("__card")).as("q_err"))
       .orderBy(col("query_id"))
 
   val qErrorSql: String =
@@ -415,7 +391,7 @@ object QueriesEstimators extends QueryModule {
        |$trueCardSql
        |)
        |SELECT est.query_id,
-       |  ${qErrSqlOf("est.est", "CAST(tru.card AS DOUBLE)")} AS q_err
+       |  ${Metrics.qErrorSql("est.est", "CAST(tru.card AS DOUBLE)")} AS q_err
        |FROM est JOIN tru ON est.query_id = tru.query_id
        |ORDER BY est.query_id""".stripMargin
 
@@ -458,7 +434,7 @@ object QueriesEstimators extends QueryModule {
   }
 
   def jointEstQ(spark: SparkSession, dir: String): DataFrame = {
-    val statsRow = memoized(spark, dir, "jointStats")(jointStatsRow(spark, dir))
+    val statsRow = Memo(spark, dir, "jointStats")(jointStatsRow(spark, dir))
     val (hid, hgroups) = specTableConj.head
     def estOf(id: String, groups: Seq[(String, Seq[Predicate])]): Column =
       groups.foldLeft(col("__j")) { case (acc, (t, _)) =>
@@ -538,9 +514,9 @@ object QueriesEstimators extends QueryModule {
     * est ≥ true on every spec — the oracle re-derives both sides.
     */
   def pessEstQ(spark: SparkSession, dir: String): DataFrame = {
-    val statsRow = memoized(spark, dir, "pessStats")(
+    val statsRow = Memo(spark, dir, "pessStats")(
       pessStatsRow(spark, dir).crossJoin(
-        memoized(spark, dir, "jointStats")(jointStatsRow(spark, dir))))
+        Memo(spark, dir, "jointStats")(jointStatsRow(spark, dir))))
     val conjByTable: Map[String, Map[String, Seq[Predicate]]] =
       specTableConj.map { case (id, groups) => id -> groups.toMap }.toMap
     def estOf(id: String, root: String, children: Seq[(String, String)]): Column = {
@@ -1104,10 +1080,10 @@ object QueriesEstimators extends QueryModule {
     * "nearest", i.e. value at round-half-even(q·(n−1))).
     */
   def qErrorQuantilesQ(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Metrics.quantilesNearest(qErrorQ(spark, dir), "q_err")
+    Metrics.quantilesNearest(qErrorQ(spark, dir), "q_err")
 
   val qErrorQuantilesSql: String = {
-    val arms = graft.operators.Metrics.quantiles
+    val arms = Metrics.quantiles
       .map(q =>
         s"SELECT $q AS quantile, q_err AS value FROM ranked WHERE rn = CAST(roundbankers($q * (n - 1), 0) AS BIGINT) + 1")
       .mkString("\nUNION ALL\n")
@@ -1154,7 +1130,7 @@ object QueriesEstimators extends QueryModule {
     modelEstFrame(spark, dir)
 
   private def modelEstFrame(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "modelEstsLit") {
+    Memo(spark, dir, "modelEstsLit") {
       // Warehouse-persisted like the trained joints it sits beside:
       // the frame is a deterministic, fingerprint-keyed product of the
       // workload tables (≈ 60 rows), but rebuilding it costs six
@@ -1178,7 +1154,7 @@ object QueriesEstimators extends QueryModule {
   def qErrorModelsQ(spark: SparkSession, dir: String): DataFrame =
     modelEstFrame(spark, dir)
       .select(col("model"), col("query_id"),
-        qErrCol(col("est"), col("__card")).as("q_err"))
+        Metrics.qError(col("est"), col("__card")).as("q_err"))
       .orderBy(col("model"), col("query_id"))
 
   /** Each model maps (id, parsed query) → its full est expression; the
@@ -1218,7 +1194,7 @@ object QueriesEstimators extends QueryModule {
       val est = estOf(id, q)
       // est is a large generated expression: bind it (and tru) once in a
       // derived table so the CASE references are cheap.
-      s"SELECT model, query_id, ${qErrSqlOf("e", "t")} AS q_err FROM" +
+      s"SELECT model, query_id, ${Metrics.qErrorSql("e", "t")} AS q_err FROM" +
         s" (SELECT '$model' AS model, '$id' AS query_id, ($est) AS e, ${tcRef(id)} AS t) AS s"
     }
     s"WITH $estCtesPrelude,\n$olsCtes\n${arms.mkString("\nUNION ALL\n")}\nORDER BY model, query_id"
@@ -1266,7 +1242,7 @@ object QueriesEstimators extends QueryModule {
       .quantilesNearestBy(qErrorModelsQ(spark, dir), "model", "q_err")
 
   val qErrorModelQuantilesSql: String = {
-    val arms = graft.operators.Metrics.quantiles
+    val arms = Metrics.quantiles
       .map(q =>
         s"SELECT model, $q AS quantile, q_err AS value FROM ranked" +
           s" WHERE rn = CAST(roundbankers($q * (n - 1), 0) AS BIGINT) + 1")
@@ -1296,7 +1272,7 @@ object QueriesEstimators extends QueryModule {
     */
   private[graft] def olsFeats(spark: SparkSession, dir: String): DataFrame =
     // raw: reachable from rawEstFrame("ols") inside the model_ests build
-    memoized(spark, dir, "olsFeats")(
+    Memo(spark, dir, "olsFeats")(
       rawEstFrame(spark, dir, "naive")
         .select(col("query_id"), col("est").as("x1"), col("__card").as("y"))
         .join(
@@ -1315,7 +1291,7 @@ object QueriesEstimators extends QueryModule {
     * the identical system.
     */
   private def olsMoments(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "olsMoments") {
+    Memo(spark, dir, "olsMoments") {
       def d(e: Column): Column =
         sum(floor(e * lit(64.0)).cast("bigint")).cast("double") / lit(64.0)
       olsFeats(spark, dir).agg(
@@ -1354,7 +1330,7 @@ object QueriesEstimators extends QueryModule {
   }
 
   private def olsEstFrame(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "est:ols")(
+    Memo(spark, dir, "est:ols")(
       olsFeats(spark, dir)
         .crossJoin(broadcast(olsMoments(spark, dir)))
         .select(col("query_id"), expr(olsEstExprSql).as("est"), col("y").as("__card")))
@@ -1418,7 +1394,7 @@ object QueriesEstimators extends QueryModule {
       .filter(col("__rn").isin(3, 4))
       .groupBy(col("query_id"))
       .agg((sum(col("est")) / 2.0).as("est"), max(col("__card")).as("__t"))
-      .select(col("query_id"), col("est"), qErrCol(col("est"), col("__t")).as("q_err"))
+      .select(col("query_id"), col("est"), Metrics.qError(col("est"), col("__t")).as("q_err"))
       .orderBy(col("query_id"))
   }
 
@@ -1445,7 +1421,7 @@ object QueriesEstimators extends QueryModule {
        |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY e, model) AS rn
        |  FROM arms) WHERE rn IN (3, 4)),
        |med AS (SELECT query_id, SUM(e) / 2.0 AS est FROM mid GROUP BY 1)
-       |SELECT m.query_id, m.est, ${qErrSqlOf("m.est", "tru.t")} AS q_err
+       |SELECT m.query_id, m.est, ${Metrics.qErrorSql("m.est", "tru.t")} AS q_err
        |FROM med m JOIN tru ON m.query_id = tru.query_id
        |ORDER BY m.query_id""".stripMargin
   }

@@ -21,11 +21,6 @@ import graft.query.{CardBenchmark, PredicateSql, PseudoSql}
   */
 object QueriesNar extends QueryModule {
 
-  /** Session-level materialization (see [[Memo]]): shared frames are
-    * built once per session and served to every consumer. */
-  private def memoized(spark: SparkSession, dir: String, tag: String)(
-      build: => DataFrame): DataFrame =
-    Memo(spark, dir, tag)(build)
   // ---- rows 11h/11i: learned NAR density model (the reference's model) ----
 
   private val narHidden = 8
@@ -38,6 +33,12 @@ object QueriesNar extends QueryModule {
     * fanout downweight — the latter alone reads ≈3.9).
     */
   private val narBound = 4.0
+
+  /** The gates' q-error: max(e, t) / max(min(e, t), 1) — the smaller
+    * side clamped at one row, so a zero estimate or truth reads as the
+    * other side's size instead of dividing by zero. */
+  private def qerr(e: Column, t: Column): Column =
+    greatest(e, t) / greatest(least(e, t), lit(1.0))
 
   /** (query_id, needs-orders, needs-lineitem, Spark predicate over the
     * DECODED joint, same predicate as SQL). Predicates touch only the
@@ -85,7 +86,7 @@ object QueriesNar extends QueryModule {
     * artifact + decode joins.
     */
   private def narJointDecoded(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narJoint") {
+    Memo(spark, dir, "narJoint") {
       import graft.operators.Encoding
       def dict(t: String, c: String) =
         Encoding.dictionary(Tables(spark, dir, t), c)
@@ -102,7 +103,7 @@ object QueriesNar extends QueryModule {
           import graft.operators.NarModel
           def dmax(d: DataFrame): Int =
             d.agg(max(col("code"))).head().getInt(0)
-          val batch = memoized(spark, dir, "trainingBatch")(QueriesSampleEst.trainingBatchQ(spark, dir))
+          val batch = Memo(spark, dir, "trainingBatch")(QueriesSampleEst.trainingBatchQ(spark, dir))
           val fMax = math.min(
             batch.agg(max(col("lo_fanout"))).head().getLong(0), 32L).toInt
           NarModel
@@ -140,11 +141,11 @@ object QueriesNar extends QueryModule {
     aggregate(array_sort(collect_list(term)), lit(0.0), (acc, x) => acc + x)
 
   private def narW(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narW")(
+    Memo(spark, dir, "narW")(
       JoinSample.totalWeight(QueriesSampleEst.chain, "customer", Fanouts.loader(spark, dir))
         .select(col("total_weight").cast("double").as("__w")))
 
-  private def narEstFrame(spark: SparkSession, dir: String): DataFrame = memoized(spark, dir, "narEstFrame") {
+  private def narEstFrame(spark: SparkSession, dir: String): DataFrame = Memo(spark, dir, "narEstFrame") {
     val joint = narJointDecoded(spark, dir)
     val w = narW(spark, dir)
     narSpecs.map { case (id, needO, needL, pred, _) =>
@@ -181,8 +182,7 @@ object QueriesNar extends QueryModule {
       .join(narTruths(spark, dir), Seq("query_id"))
       .select(col("query_id"), col("__t").cast("bigint").as("truth"),
         (!isnan(col("est")) && col("est").isNotNull && col("est") >= 1.0 &&
-          greatest(col("est"), col("__t")) /
-            greatest(least(col("est"), col("__t")), lit(1.0)) <= narBound).as("est_ok"))
+          qerr(col("est"), col("__t")) <= narBound).as("est_ok"))
       .orderBy(col("query_id"))
 
   val narEstGatedSql: String =
@@ -198,7 +198,7 @@ object QueriesNar extends QueryModule {
     * against).
     */
   private def narTruths(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narTruths") {
+    Memo(spark, dir, "narTruths") {
       // Warehouse-persisted: the truths are a deterministic,
       // fingerprint-keyed product of the same chain tables that key
       // the joints they gate — rebuilding costs the 2-join eval scan
@@ -242,7 +242,7 @@ object QueriesNar extends QueryModule {
     * cross-product, double digits), never over data. Rows-only; gated
     * against the exact-enumeration leg by nar_check's prog_ok.
     */
-  private def narProgFrame(spark: SparkSession, dir: String): DataFrame = memoized(spark, dir, "narProgFrame") {
+  private def narProgFrame(spark: SparkSession, dir: String): DataFrame = Memo(spark, dir, "narProgFrame") {
     import org.apache.spark.sql.expressions.Window
     val cw = Window.orderBy(col("c_code"), col("o_code"), col("l_code"))
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -286,10 +286,8 @@ object QueriesNar extends QueryModule {
       .join(narEstFrame(spark, dir), Seq("query_id"))
       .join(narTruths(spark, dir), Seq("query_id"))
       .select(col("query_id"), col("__t").cast("bigint").as("truth"),
-        (greatest(col("__prog"), col("__t")) /
-          greatest(least(col("__prog"), col("__t")), lit(1.0)) <= narBound * 2.0 &&
-          greatest(col("est"), col("__prog")) /
-            greatest(least(col("est"), col("__prog")), lit(1.0)) <= 2.0).as("prog_ok"))
+        (qerr(col("__prog"), col("__t")) <= narBound * 2.0 &&
+          qerr(col("est"), col("__prog")) <= 2.0).as("prog_ok"))
       .orderBy(col("query_id"))
 
   val narProgressiveGatedSql: String =
@@ -315,12 +313,10 @@ object QueriesNar extends QueryModule {
       .select(col("query_id"),
         (!isnan(col("est")) && col("est").isNotNull).as("finite_ok"),
         (col("est") >= 1.0).as("pos_ok"),
-        (greatest(col("est"), col("__t")) /
-          greatest(least(col("est"), col("__t")), lit(1.0)) <= narBound).as("qerr_ok"),
+        (qerr(col("est"), col("__t")) <= narBound).as("qerr_ok"),
         // 4096 forward samples put the sampler within ~10% of exact
         // enumeration at these selectivities; 2× flags a real breakage
-        (greatest(col("est"), col("__prog")) /
-          greatest(least(col("est"), col("__prog")), lit(1.0)) <= 2.0).as("prog_ok"))
+        (qerr(col("est"), col("__prog")) <= 2.0).as("prog_ok"))
       .orderBy(col("query_id"))
 
   val narCheckSql: String =
@@ -352,7 +348,7 @@ object QueriesNar extends QueryModule {
     * the cap is a catalog constant, not a fitted parameter.
     */
   private def narIncJoints(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narIncJoints") {
+    Memo(spark, dir, "narIncJoints") {
       Checkpoint(spark, dir, "nar_inc_joint")(narFingerprint(spark, dir)) {
         import graft.operators.{Encoding, NarModel}
         def dict(t: String, c: String) =
@@ -362,7 +358,7 @@ object QueriesNar extends QueryModule {
         val (cMax, oMax, lMax) = (dmax(dict("customer", "c_mktsegment")),
           dmax(dict("orders", "o_orderstatus")),
           dmax(dict("lineitem", "l_returnflag")))
-        val batch = memoized(spark, dir, "trainingBatch")(QueriesSampleEst.trainingBatchQ(spark, dir))
+        val batch = Memo(spark, dir, "trainingBatch")(QueriesSampleEst.trainingBatchQ(spark, dir))
         val fMax = math.min(
           batch.agg(max(col("lo_fanout"))).head().getLong(0), 32L).toInt
         // slots are md5 hex ids (uniform): the low half of the hex space
@@ -384,7 +380,7 @@ object QueriesNar extends QueryModule {
   /** The persisted base/inc joints decoded back to values (code 1 →
     * NULL = absent), same decode as [[narJointDecoded]]. */
   private def narIncDecoded(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narIncDecoded") {
+    Memo(spark, dir, "narIncDecoded") {
       // Warehouse-persisted beside nar_inc_joint: the decode is
       // deterministic (checkpointed joints × data dictionaries), but
       // re-deriving it per session re-scans the dictionary tables
@@ -408,7 +404,7 @@ object QueriesNar extends QueryModule {
     * [[narEstFrame]]'s formula per model tag, one grouped aggregate
     * over the checkpoint instead of one per model. */
   private def narIncEstFrame(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narIncEstFrame") {
+    Memo(spark, dir, "narIncEstFrame") {
       // Warehouse-persisted: the per-spec before/after estimates are a
       // bounded (2 × |specs| aggregates), deterministic product of the
       // checkpointed joints — but re-deriving them was the single
@@ -462,8 +458,7 @@ object QueriesNar extends QueryModule {
       .select(col("query_id"), col("__t").cast("bigint").as("truth"),
         (!isnan(col("inc_est")) && col("inc_est").isNotNull &&
           col("inc_est") >= 1.0 &&
-          greatest(col("inc_est"), col("__t")) /
-            greatest(least(col("inc_est"), col("__t")), lit(1.0)) <= narBound)
+          qerr(col("inc_est"), col("__t")) <= narBound)
           .as("est_ok"))
       .orderBy(col("query_id"))
 
@@ -489,8 +484,6 @@ object QueriesNar extends QueryModule {
     *    makes incremental training trustworthy at all.
     */
   def narIncCheckQ(spark: SparkSession, dir: String): DataFrame = {
-    def qerr(e: Column, t: Column): Column =
-      greatest(e, t) / greatest(least(e, t), lit(1.0))
     narIncEstFrame(spark, dir)
       .join(narTruths(spark, dir), Seq("query_id"))
       .join(narEstFrame(spark, dir).withColumnRenamed("est", "__scratch"),
@@ -536,7 +529,7 @@ object QueriesNar extends QueryModule {
         .agg(max(col("code"))).head().getInt(0)
     val (cMax, oMax, lMax) = (dmax("customer", "c_mktsegment"),
       dmax("orders", "o_orderstatus"), dmax("lineitem", "l_returnflag"))
-    val batch = memoized(spark, dir, "trainingBatch")(QueriesSampleEst.trainingBatchQ(spark, dir))
+    val batch = Memo(spark, dir, "trainingBatch")(QueriesSampleEst.trainingBatchQ(spark, dir))
     val fMax = math.min(
       batch.agg(max(col("lo_fanout"))).head().getLong(0), 32L).toInt
     val combos = batch
@@ -557,7 +550,7 @@ object QueriesNar extends QueryModule {
     * conditional ([[graft.operators.NarTransformer]]); persisted to the
     * warehouse model store like every trained artifact. */
   private def narTxJoint(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narTxJoint") {
+    Memo(spark, dir, "narTxJoint") {
       Checkpoint(spark, dir, "nar_tx_joint")(narFingerprint(spark, dir)) {
         val (combos, cMax, oMax, lMax, fMax) = narTxInputs(spark, dir)
         val model = graft.operators.NarTransformer.train(
@@ -587,7 +580,7 @@ object QueriesNar extends QueryModule {
 
   /** The persisted transformer joint decoded back to values. */
   private def narTxDecoded(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narTxDecoded") {
+    Memo(spark, dir, "narTxDecoded") {
       narDictDecode(spark, dir, narTxJoint(spark, dir))
     }
 
@@ -607,7 +600,7 @@ object QueriesNar extends QueryModule {
     * joint — est = W × Σ P̂(combo satisfying spec), E[1/fanout]
     * downweight on order-level specs. */
   private def narTxEstFrame(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narTxEstFrame") {
+    Memo(spark, dir, "narTxEstFrame") {
       val joint = narTxDecoded(spark, dir)
       val w = narW(spark, dir)
       narSpecs.map { case (id, needO, needL, pred, _) =>
@@ -638,8 +631,7 @@ object QueriesNar extends QueryModule {
       .join(narTruths(spark, dir), Seq("query_id"))
       .select(col("query_id"), col("__t").cast("bigint").as("truth"),
         (!isnan(col("est")) && col("est").isNotNull && col("est") >= 1.0 &&
-          greatest(col("est"), col("__t")) /
-            greatest(least(col("est"), col("__t")), lit(1.0)) <= narBound).as("est_ok"))
+          qerr(col("est"), col("__t")) <= narBound).as("est_ok"))
       .orderBy(col("query_id"))
 
   val narTxEstGatedSql: String =
@@ -657,8 +649,6 @@ object QueriesNar extends QueryModule {
     * cross-check that makes either trustworthy (the reference ships
     * both backbones for exactly this comparison). */
   def narTxCheckQ(spark: SparkSession, dir: String): DataFrame = {
-    def qerr(e: Column, t: Column): Column =
-      greatest(e, t) / greatest(least(e, t), lit(1.0))
     narTxEstFrame(spark, dir)
       .join(narTruths(spark, dir), Seq("query_id"))
       .join(narEstFrame(spark, dir).withColumnRenamed("est", "__mlp"),
@@ -698,7 +688,7 @@ object QueriesNar extends QueryModule {
     * actual training objective alongside the AR re-expressions.
     */
   private def narMlmJoint(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narMlmJoint") {
+    Memo(spark, dir, "narMlmJoint") {
       Checkpoint(spark, dir, "nar_mlm_joint")(narFingerprint(spark, dir)) {
         val (combos, cMax, oMax, lMax, fMax) = narTxInputs(spark, dir)
         val model = graft.operators.NarMlm.train(
@@ -710,7 +700,7 @@ object QueriesNar extends QueryModule {
     }
 
   private def narMlmDecoded(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narMlmDecoded") {
+    Memo(spark, dir, "narMlmDecoded") {
       narDictDecode(spark, dir, narMlmJoint(spark, dir))
     }
 
@@ -721,7 +711,7 @@ object QueriesNar extends QueryModule {
   /** [[narEstFrame]]'s estimate formula over the masked-denoising
     * joint — shared algebra, third independently-trained model. */
   private def narMlmEstFrame(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narMlmEstFrame") {
+    Memo(spark, dir, "narMlmEstFrame") {
       val joint = narMlmDecoded(spark, dir)
       val w = narW(spark, dir)
       narSpecs.map { case (id, needO, needL, pred, _) =>
@@ -751,8 +741,7 @@ object QueriesNar extends QueryModule {
       .join(narTruths(spark, dir), Seq("query_id"))
       .select(col("query_id"), col("__t").cast("bigint").as("truth"),
         (!isnan(col("est")) && col("est").isNotNull && col("est") >= 1.0 &&
-          greatest(col("est"), col("__t")) /
-            greatest(least(col("est"), col("__t")), lit(1.0)) <= narBound).as("est_ok"))
+          qerr(col("est"), col("__t")) <= narBound).as("est_ok"))
       .orderBy(col("query_id"))
 
   val narMlmEstGatedSql: String =
@@ -770,8 +759,6 @@ object QueriesNar extends QueryModule {
     * exists for, now across two different training OBJECTIVES as well.
     */
   def narMlmCheckQ(spark: SparkSession, dir: String): DataFrame = {
-    def qerr(e: Column, t: Column): Column =
-      greatest(e, t) / greatest(least(e, t), lit(1.0))
     narMlmEstFrame(spark, dir)
       .join(narTruths(spark, dir), Seq("query_id"))
       .join(narEstFrame(spark, dir).withColumnRenamed("est", "__mlp"),
@@ -815,7 +802,7 @@ object QueriesNar extends QueryModule {
     * sample-sized batch.
     */
   private def narContHead(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narContHead") {
+    Memo(spark, dir, "narContHead") {
       Checkpoint(spark, dir, "nar_cont_head")(narFingerprint(spark, dir)) {
         import graft.operators.Encoding
         import spark.implicits._
@@ -832,7 +819,7 @@ object QueriesNar extends QueryModule {
         // diff. log2(fanout) is quantized onto the 1e-6 grid first;
         // the SUM is then an exact BIGINT in any partition order and
         // the mean is one deterministic double division.
-        val batch = memoized(spark, dir, "trainingBatch")(QueriesSampleEst.trainingBatchQ(spark, dir))
+        val batch = Memo(spark, dir, "trainingBatch")(QueriesSampleEst.trainingBatchQ(spark, dir))
         val lg = batch.select(col("c_code"), col("o_code"), col("l_code"),
           expr("CAST(round(log2(CAST(lo_fanout AS DOUBLE)) * 1e6) AS BIGINT)")
             .as("__lf6"))
@@ -860,7 +847,7 @@ object QueriesNar extends QueryModule {
     * point-predicted fo_hat (1/fo, the reference's cont-fanout
     * scaling) instead of multiplying by the categorical E[1/fanout]. */
   private def narContEstFrame(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narContEstFrame") {
+    Memo(spark, dir, "narContEstFrame") {
       val joint = narJointDecoded(spark, dir)
         .join(broadcast(narContHead(spark, dir)),
           Seq("c_code", "o_code", "l_code"), "left")
@@ -898,8 +885,7 @@ object QueriesNar extends QueryModule {
       .join(narTruths(spark, dir), Seq("query_id"))
       .select(col("query_id"), col("__t").cast("bigint").as("truth"),
         (!isnan(col("est")) && col("est").isNotNull && col("est") >= 1.0 &&
-          greatest(col("est"), col("__t")) /
-            greatest(least(col("est"), col("__t")), lit(1.0)) <= narBound).as("est_ok"))
+          qerr(col("est"), col("__t")) <= narBound).as("est_ok"))
       .orderBy(col("query_id"))
 
   val narContEstGatedSql: String =
@@ -917,8 +903,6 @@ object QueriesNar extends QueryModule {
     * flip (the nar_tx_check discipline applied across fanout
     * ENCODINGS rather than architectures). */
   def narContCheckQ(spark: SparkSession, dir: String): DataFrame = {
-    def qerr(e: Column, t: Column): Column =
-      greatest(e, t) / greatest(least(e, t), lit(1.0))
     narContEstFrame(spark, dir)
       .join(narTruths(spark, dir), Seq("query_id"))
       .join(narEstFrame(spark, dir).withColumnRenamed("est", "__cat"),
@@ -960,7 +944,7 @@ object QueriesNar extends QueryModule {
     * `--dump-intermediates` saves exactly these per-step eval products),
     * so later sessions serve the curve without retraining. */
   private def narTxCurveEsts(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narTxCurveEsts") {
+    Memo(spark, dir, "narTxCurveEsts") {
      Checkpoint(spark, dir, "nar_tx_curve")(narFingerprint(spark, dir)) {
       val (combos, cMax, oMax, lMax, fMax) = narTxInputs(spark, dir)
       val snaps = new graft.operators.NarTransformer(
@@ -995,8 +979,6 @@ object QueriesNar extends QueryModule {
     * show). A broken snapshot path, optimizer-state reset, or divergent
     * training breaks the hash. */
   def narTrainingCurveQ(spark: SparkSession, dir: String): DataFrame = {
-    def qerr(e: Column, t: Column): Column =
-      greatest(e, t) / greatest(least(e, t), lit(1.0))
     val rows = narTxCurveEsts(spark, dir)
       .join(narTruths(spark, dir), Seq("query_id"))
       .withColumn("__qe", qerr(col("est"), col("__t")))
@@ -1055,7 +1037,7 @@ object QueriesNar extends QueryModule {
     * making the join sample; trials are driver-side catalog-sized
     * fits, embarrassingly parallel in a real deployment. */
   private def narHpoEstFrame(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "narHpoEstFrame") {
+    Memo(spark, dir, "narHpoEstFrame") {
       Checkpoint(spark, dir, "nar_hpo_evals")(narFingerprint(spark, dir)) {
         val (combos, cMax, oMax, lMax, fMax) = narTxInputs(spark, dir)
         import spark.implicits._
@@ -1097,8 +1079,6 @@ object QueriesNar extends QueryModule {
     * q-error bound per spec — the search must END at a servable model,
     * which is the property the reference's search exists to guarantee. */
   def narHpoQ(spark: SparkSession, dir: String): DataFrame = {
-    def qerr(e: Column, t: Column): Column =
-      greatest(e, t) / greatest(least(e, t), lit(1.0))
     val ests = narHpoEstFrame(spark, dir)
     val sel = ests.groupBy().agg(
       min_by(struct(col("trial"), col("loss")),

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Fanouts, JoinSample}
+import graft.operators.{Fanouts, JoinSample, Metrics}
 import graft.query.{CardBenchmark, Predicate, PredicateSql, PseudoSql}
 
 /** Sampling-based estimation (SURVEY.md §2 rows 12/14): the weighted
@@ -18,11 +18,6 @@ import graft.query.{CardBenchmark, Predicate, PredicateSql, PseudoSql}
   */
 object QueriesSampleEst extends QueryModule {
 
-  /** Session-level materialization (see [[Memo]]): shared frames are
-    * built once per session and served to every consumer. */
-  private def memoized(spark: SparkSession, dir: String, tag: String)(
-      build: => DataFrame): DataFrame =
-    Memo(spark, dir, tag)(build)
   // ---- rows 12/14: weighted join sample + sample-based estimator ----
 
   /** customer ← orders ← lineitem chain, rooted at customer. */
@@ -157,7 +152,7 @@ object QueriesSampleEst extends QueryModule {
     * shared by join_sample and sample_est.
     */
   private def chainSample(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "chainSample")(
+    Memo(spark, dir, "chainSample")(
       JoinSample.sample(
         chain, "customer", "c_custkey", Fanouts.loader(spark, dir), sampleN, sampleSeed))
 
@@ -235,7 +230,7 @@ object QueriesSampleEst extends QueryModule {
     val w = JoinSample.totalWeight(chain, "customer", load)
       .select(col("total_weight").cast("double"))
     val reps = spark.range(PoissonGrid.bootstrapR.toLong).select(col("id").as("r"))
-    val repl = memoized(spark, dir, "sampleCiRepl")(
+    val repl = Memo(spark, dir, "sampleCiRepl")(
       sample.crossJoin(reps)
         .withColumn("__h",
           conv(substring(md5(concat(lit("sci:"), col("r").cast("string"), lit(":"),
@@ -252,7 +247,7 @@ object QueriesSampleEst extends QueryModule {
     // hit-counts as parallel columns, one pass over the sample the point
     // estimates — per-spec output rows are tiny selects over a memoized
     // one-row frame, not 2·|specs| separate jobs
-    val wide = memoized(spark, dir, "sampleCiWide") {
+    val wide = Memo(spark, dir, "sampleCiWide") {
       val repAggs = coveredSpecs.map { case (id, q) =>
         sum(when(satOf(q), col("m")).otherwise(0L)).cast("double").as(s"k_${cn(id)}")
       } :+ sum(col("m")).cast("double").as("__n")
@@ -388,7 +383,7 @@ object QueriesSampleEst extends QueryModule {
       }
       .reduce(_.unionAll(_))
       .join(QueriesEstimators.bothsAll(spark, dir).select(col("query_id"), col("__card")), Seq("query_id"))
-      .select(col("query_id"), col("est"), QueriesEstimators.qErrCol(col("est"), col("__card")).as("q_err"))
+      .select(col("query_id"), col("est"), Metrics.qError(col("est"), col("__card")).as("q_err"))
       .orderBy(col("query_id"))
   }
 
@@ -420,7 +415,7 @@ object QueriesSampleEst extends QueryModule {
       val from = (s"f0_$id" +: preds.indices.map(i0 => s"g${i0 + 1}_$id")).mkString(", ")
       val tru = s"CAST((${CardBenchmark.specs.toMap.apply(id)}) AS DOUBLE)"
       val arm =
-        s"SELECT query_id, e AS est, ${QueriesEstimators.qErrSqlOf("e", "t")} AS q_err FROM" +
+        s"SELECT query_id, e AS est, ${Metrics.qErrorSql("e", "t")} AS q_err FROM" +
           s" (SELECT '$id' AS query_id, CAST(tw AS DOUBLE) * $fprod AS e, $tru AS t" +
           s" FROM tw, $from) z"
       (ctes, arm)

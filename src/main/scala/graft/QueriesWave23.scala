@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Metrics
+
 /** Round-11 wave: the factorized-column estimation leg — the one
   * reference estimation mechanism with no exercised counterpart until
   * now. The reference bit-slices a high-cardinality column's dictionary
@@ -173,18 +175,9 @@ object QueriesWave23 extends QueryModule {
       .crossJoin(broadcast(geom.select(col("k").as("n_scols"))))
       .select(col("query_id"), col("n_scols"),
         col("est"), col("card"),
-        qErr(col("est"), col("card").cast("double")).as("q_err"))
+        Metrics.qError(col("est"), col("card").cast("double")).as("q_err"))
       .orderBy(col("query_id"))
   }
-
-  /** calc_q_err semantics (run.py:60-67), local copy with the same
-    * zero-handling as the est-family gate.
-    */
-  private def qErr(est: Column, tru: Column): Column =
-    when(est === 0.0 && tru === 0.0, lit(1.0))
-      .when(est === 0.0, tru)
-      .when(tru === 0.0, est)
-      .otherwise(greatest(est / tru, tru / est))
 
   /** Progressive mask narrowing: step j consumes the j most-significant
     * subcolumns; surviving mass = Σ counts over distinct qualifying
@@ -256,12 +249,6 @@ object QueriesWave23 extends QueryModule {
        |)""".stripMargin
   }
 
-  private val qErrSql: String =
-    """CASE WHEN est = 0 AND cardd = 0 THEN 1.0
-      |     WHEN est = 0 THEN cardd
-      |     WHEN cardd = 0 THEN est
-      |     ELSE GREATEST(est / cardd, cardd / est) END""".stripMargin
-
   val factEstSql: String = {
     // exact HUGEINT product over the ≤5 slice marginals (product() would
     // accumulate in DOUBLE and round past 2^53 — n^3 at sf1 already
@@ -290,7 +277,7 @@ object QueriesWave23 extends QueryModule {
        |c AS (SELECT query_id, CAST(SUM(cnt) AS BIGINT) AS card
        |  FROM qual GROUP BY 1)
        |SELECT e.query_id, geom.k AS n_scols, e.est, c.card,
-       |  (SELECT $qErrSql FROM (SELECT e.est AS est, CAST(c.card AS DOUBLE) AS cardd)) AS q_err
+       |  (SELECT ${Metrics.qErrorSql("est", "cardd")} FROM (SELECT e.est AS est, CAST(c.card AS DOUBLE) AS cardd)) AS q_err
        |FROM e JOIN c ON c.query_id = e.query_id, geom
        |ORDER BY e.query_id""".stripMargin
   }

@@ -12,9 +12,26 @@ object Metrics {
 
   val quantiles: Seq[Double] = Seq(0.5, 0.9, 0.95, 0.99, 1.0)
 
-  /** q-error column: max(est/true, true/est), both sides as doubles. */
-  def qError(est: Column, truth: Column): Column =
-    greatest(est.cast("double") / truth.cast("double"), truth.cast("double") / est.cast("double"))
+  /** q-error column with calc_q_err's exact semantics (reference:
+    * scardina/run.py:60-67): true=0 ∧ est≠0 → est; est=0 ∧ true≠0 →
+    * true; both 0 → 1.0; else max(est/true, true/est). est=0 is
+    * reachable (MCV zero tail when ndv≤k, zero LIKE match counts),
+    * where plain division raises under Spark's ANSI mode (NULL without
+    * it, inf in DuckDB) — a parity break and poisoned quantiles.
+    * Mirrored in [[qErrorSql]] so both sides agree.
+    */
+  def qError(est: Column, tru: Column): Column =
+    when(tru === 0.0 && est =!= 0.0, est)
+      .when(est === 0.0 && tru =!= 0.0, tru)
+      .when(tru === 0.0 && est === 0.0, lit(1.0))
+      .otherwise(greatest(est / tru, tru / est))
+
+  /** SQL twin of [[qError]]; `est`/`tru` must be cheap references. */
+  def qErrorSql(est: String, tru: String): String =
+    s"CASE WHEN $tru = 0 AND $est <> 0 THEN $est" +
+      s" WHEN $est = 0 AND $tru <> 0 THEN $tru" +
+      s" WHEN $tru = 0 AND $est = 0 THEN 1.0" +
+      s" ELSE GREATEST($est / $tru, $tru / $est) END"
 
   /** Exact "nearest"-interpolation quantiles of `valueCol`, matching
     * pandas quantile(interpolation="nearest"): value at index

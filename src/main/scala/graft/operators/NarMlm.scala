@@ -25,13 +25,11 @@ package graft.operators
   * for why the all-masked input must be in-distribution here), so the
   * fit is deterministic and the downstream rows hash-gate.
   *
-  * Architecture per position i ∈ {0..3} (c, o, l, fanout):
-  * x_i = posEmb_i + (masked ? 0 : emb_i(token_i)) — the reference's
-  * `masked_x = x * ~mask` zeroes masked inputs the same way; one
-  * single-head full-attention block with residual, ReLU FFN with
-  * residual (the repo's minimal hand-backprop transformer block — no
-  * LayerNorm, same as the AR leg, gradient-checked in the spec);
-  * per-position softmax heads over each column's code domain.
+  * Architecture: the shared [[AttentionNet]] block — the one the AR
+  * leg trains, here without the causal mask — over the four positions
+  * (c, o, l, fanout); a masked position's input carries no token
+  * embedding, and each position's softmax head ranges over its
+  * column's code domain.
   *
   * Scale posture is the NAR family's: the 100 TB work is producing the
   * weighted join-sample combo table; the fit runs on that bounded
@@ -44,150 +42,9 @@ final class NarMlm(
 
   private val nPos = 4
   private val vocab = Array(cMax, oMax, lMax, fMax)
-
-  // flat layout: [posEmb 4d | embC | embO | embL | embF |
-  //   Wq | Wk | Wv | Wo (d*d each) | W1 h*d | b1 h | W2 d*h | b2 d |
-  //   U0 cMax*d | bo0 cMax | U1 | bo1 | U2 | bo2 | U3 | bo3]
-  private val sizes: Array[Int] = Array(
-    nPos * d, cMax * d, oMax * d, lMax * d, fMax * d,
-    d * d, d * d, d * d, d * d,
-    h * d, h, d * h, d,
-    cMax * d, cMax, oMax * d, oMax, lMax * d, lMax, fMax * d, fMax)
-  private val offs: Array[Int] = sizes.scanLeft(0)(_ + _)
-  val nParams: Int = offs.last
-
-  val params: Array[Double] = {
-    val rng = new java.util.Random(seed)
-    val p = Array.fill(nParams)(rng.nextGaussian() * 0.1)
-    var s = 0
-    while (s < sizes.length) {
-      val isBias = s == 10 || s == 12 || (s >= 14 && s % 2 == 0)
-      if (isBias) java.util.Arrays.fill(p, offs(s), offs(s + 1), 0.0)
-      s += 1
-    }
-    p
-  }
-
-  @inline private def off(i: Int): Int = offs(i)
-  private def embOff(i: Int, t: Int): Int = off(1 + i) + t * d
-  private def headOff(i: Int): (Int, Int) = (off(13 + 2 * i), off(14 + 2 * i))
-
-  private def mv(p: Array[Double], mo: Int, rows: Int, cols: Int,
-      x: Array[Double], xo: Int, y: Array[Double], yo: Int): Unit = {
-    var r = 0
-    while (r < rows) {
-      var acc = 0.0; var c = 0; val base = mo + r * cols
-      while (c < cols) { acc += p(base + c) * x(xo + c); c += 1 }
-      y(yo + r) += acc; r += 1
-    }
-  }
-
-  private def mvGrad(p: Array[Double], g: Array[Double], mo: Int, rows: Int,
-      cols: Int, x: Array[Double], xo: Int, dy: Array[Double], dyo: Int,
-      dx: Array[Double], dxo: Int): Unit = {
-    var r = 0
-    while (r < rows) {
-      val dyr = dy(dyo + r); val base = mo + r * cols
-      var c = 0
-      while (c < cols) {
-        g(base + c) += dyr * x(xo + c)
-        if (dx != null) dx(dxo + c) += p(base + c) * dyr
-        c += 1
-      }
-      r += 1
-    }
-  }
-
-  private def softmaxInPlace(a: Array[Double], o: Int, n: Int): Unit = {
-    var m = Double.NegativeInfinity; var i = 0
-    while (i < n) { if (a(o + i) > m) m = a(o + i); i += 1 }
-    var z = 0.0; i = 0
-    while (i < n) { val e = math.exp(a(o + i) - m); a(o + i) = e; z += e; i += 1 }
-    i = 0
-    while (i < n) { a(o + i) /= z; i += 1 }
-  }
-
-  private final class Pass {
-    val x = new Array[Double](nPos * d)
-    val q = new Array[Double](nPos * d)
-    val k = new Array[Double](nPos * d)
-    val v = new Array[Double](nPos * d)
-    val a = new Array[Double](nPos * nPos) // FULL attention rows
-    val ctx = new Array[Double](nPos * d)
-    val y = new Array[Double](nPos * d)
-    val u = new Array[Double](nPos * h)
-    val z = new Array[Double](nPos * d)
-    val probs = Array.tabulate(nPos)(i => new Array[Double](vocab(i)))
-  }
-  private val fwdPass = new Pass
-  private val scale = 1.0 / math.sqrt(d.toDouble)
-
-  /** Forward for tokens `t` (0-based codes, all four positions) under
-    * `mask` (bit i set = position i masked: input zeroed, head i read).
-    */
-  private def forward(t: Array[Int], mask: Int, ps: Pass): Array[Array[Double]] = {
-    val p = params
-    java.util.Arrays.fill(ps.q, 0.0); java.util.Arrays.fill(ps.k, 0.0)
-    java.util.Arrays.fill(ps.v, 0.0); java.util.Arrays.fill(ps.ctx, 0.0)
-    var i = 0
-    while (i < nPos) {
-      val xb = i * d
-      val masked = (mask & (1 << i)) != 0
-      var j = 0
-      while (j < d) {
-        ps.x(xb + j) = p(off(0) + i * d + j) +
-          (if (masked) 0.0 else p(embOff(i, t(i)) + j))
-        j += 1
-      }
-      mv(p, off(5), d, d, ps.x, xb, ps.q, xb)
-      mv(p, off(6), d, d, ps.x, xb, ps.k, xb)
-      mv(p, off(7), d, d, ps.x, xb, ps.v, xb)
-      i += 1
-    }
-    i = 0
-    while (i < nPos) {
-      // full (non-causal) scores over ALL j — models.py:211
-      var j = 0
-      while (j < nPos) {
-        var s = 0.0; var c = 0
-        while (c < d) { s += ps.q(i * d + c) * ps.k(j * d + c); c += 1 }
-        ps.a(i * nPos + j) = s * scale
-        j += 1
-      }
-      softmaxInPlace(ps.a, i * nPos, nPos)
-      var c = 0
-      while (c < d) {
-        var acc = 0.0; j = 0
-        while (j < nPos) { acc += ps.a(i * nPos + j) * ps.v(j * d + c); j += 1 }
-        ps.ctx(i * d + c) = acc
-        c += 1
-      }
-      val xb = i * d
-      System.arraycopy(ps.x, xb, ps.y, xb, d)
-      mv(p, off(8), d, d, ps.ctx, xb, ps.y, xb)
-      var r = 0
-      while (r < h) {
-        var acc = p(off(10) + r); var cc = 0; val base = off(9) + r * d
-        while (cc < d) { acc += p(base + cc) * ps.y(xb + cc); cc += 1 }
-        ps.u(i * h + r) = if (acc > 0.0) acc else 0.0
-        r += 1
-      }
-      c = 0
-      while (c < d) { ps.z(xb + c) = ps.y(xb + c) + p(off(12) + c); c += 1 }
-      mv(p, off(11), d, h, ps.u, i * h, ps.z, xb)
-      val (uo, bo) = headOff(i)
-      val pr = ps.probs(i)
-      r = 0
-      while (r < vocab(i)) {
-        var acc = p(bo + r); var cc = 0; val base = uo + r * d
-        while (cc < d) { acc += p(base + cc) * ps.z(xb + cc); cc += 1 }
-        pr(r) = acc; r += 1
-      }
-      softmaxInPlace(pr, 0, vocab(i))
-      i += 1
-    }
-    ps.probs
-  }
+  private val net = new AttentionNet(vocab, vocab, d, h, causal = false, seed)
+  val nParams: Int = net.nParams
+  val params: Array[Double] = net.params
 
   /** All non-empty masks (1..nPos positions masked), mask size uniform
     * then a uniform subset: weight (1/nPos)·(1/C(nPos,|m|)). One
@@ -210,178 +67,45 @@ final class NarMlm(
       .toArray
   }
 
+  /** Inputs for tokens `t` under `mask` (bit i set = position i masked:
+    * no token, head i read), written into `in`. */
+  private def maskInputs(t: Array[Int], mask: Int, in: Array[Int]): Array[Int] = {
+    var i = 0
+    while (i < nPos) { in(i) = if ((mask & (1 << i)) != 0) -1 else t(i); i += 1 }
+    in
+  }
+
   /** Expected masked-denoising loss over `data` rows (c, o, l, f, w) ×
     * the enumerated mask space; gradients accumulate into `grad` when
     * non-null. Loss per (combo, mask) = Σ_{i∈mask} −log P̂_i(t_i) /
     * |mask| (models.py:322 nll_masked), weighted by the combo weight
-    * and the mask's draw probability.
+    * and the mask's draw probability; only MASKED heads carry loss
+    * (models.py:327).
     */
   def lossAndGrad(data: Array[(Int, Int, Int, Int, Double)],
       grad: Array[Double]): Double = {
-    val p = params
     var loss = 0.0
     val wTot = data.map(_._5).sum
-    val ps = fwdPass
-    val dz = new Array[Double](nPos * d)
-    val dy = new Array[Double](nPos * d)
-    val dctx = new Array[Double](nPos * d)
-    val dq = new Array[Double](nPos * d)
-    val dk = new Array[Double](nPos * d)
-    val dv = new Array[Double](nPos * d)
-    val dx = new Array[Double](nPos * d)
-    val du = new Array[Double](h)
     val t = new Array[Int](nPos)
+    val in = new Array[Int](nPos)
+    val hw = new Array[Double](nPos)
     data.foreach { case (c0, o0, l0, f0, w) =>
       t(0) = c0; t(1) = o0; t(2) = l0; t(3) = f0
       maskPatterns.foreach { case (mask, pw) =>
-        val nm = Integer.bitCount(mask)
-        val ws = w / wTot * pw / nm
-        val probs = forward(t, mask, ps)
+        val ws = w / wTot * pw / Integer.bitCount(mask)
         var i = 0
-        while (i < nPos) {
-          if ((mask & (1 << i)) != 0)
-            loss -= ws * math.log(math.max(probs(i)(t(i)), 1e-300))
-          i += 1
-        }
-        if (grad != null) {
-          java.util.Arrays.fill(dz, 0.0); java.util.Arrays.fill(dy, 0.0)
-          java.util.Arrays.fill(dctx, 0.0); java.util.Arrays.fill(dq, 0.0)
-          java.util.Arrays.fill(dk, 0.0); java.util.Arrays.fill(dv, 0.0)
-          java.util.Arrays.fill(dx, 0.0)
-          // heads: only MASKED positions carry loss (models.py:327)
-          i = 0
-          while (i < nPos) {
-            if ((mask & (1 << i)) != 0) {
-              val xb = i * d
-              val (uo, bo) = headOff(i)
-              var r = 0
-              while (r < vocab(i)) {
-                val dl = ws * (probs(i)(r) - (if (r == t(i)) 1.0 else 0.0))
-                grad(bo + r) += dl
-                var cc = 0; val base = uo + r * d
-                while (cc < d) {
-                  grad(base + cc) += dl * ps.z(xb + cc)
-                  dz(xb + cc) += p(base + cc) * dl
-                  cc += 1
-                }
-                r += 1
-              }
-            }
-            i += 1
-          }
-          // FFN backward
-          i = 0
-          while (i < nPos) {
-            val xb = i * d
-            var c = 0
-            while (c < d) {
-              grad(off(12) + c) += dz(xb + c); dy(xb + c) += dz(xb + c); c += 1
-            }
-            java.util.Arrays.fill(du, 0.0)
-            var r = 0
-            while (r < d) {
-              val dzr = dz(xb + r); val base = off(11) + r * h
-              var cc = 0
-              while (cc < h) {
-                grad(base + cc) += dzr * ps.u(i * h + cc)
-                du(cc) += p(base + cc) * dzr
-                cc += 1
-              }
-              r += 1
-            }
-            r = 0
-            while (r < h) {
-              val g = if (ps.u(i * h + r) > 0.0) du(r) else 0.0
-              grad(off(10) + r) += g
-              val base = off(9) + r * d
-              var cc = 0
-              while (cc < d) {
-                grad(base + cc) += g * ps.y(xb + cc)
-                dy(xb + cc) += p(base + cc) * g
-                cc += 1
-              }
-              r += 1
-            }
-            i += 1
-          }
-          // attention backward (full, non-causal)
-          i = 0
-          while (i < nPos) {
-            val xb = i * d
-            var c = 0
-            while (c < d) { dx(xb + c) += dy(xb + c); c += 1 }
-            mvGrad(p, grad, off(8), d, d, ps.ctx, xb, dy, xb, dctx, xb)
-            val da = new Array[Double](nPos)
-            var j = 0
-            while (j < nPos) {
-              var acc = 0.0; c = 0
-              while (c < d) {
-                dv(j * d + c) += ps.a(i * nPos + j) * dctx(xb + c)
-                acc += ps.v(j * d + c) * dctx(xb + c)
-                c += 1
-              }
-              da(j) = acc
-              j += 1
-            }
-            var dot = 0.0; j = 0
-            while (j < nPos) { dot += ps.a(i * nPos + j) * da(j); j += 1 }
-            j = 0
-            while (j < nPos) {
-              val dsj = ps.a(i * nPos + j) * (da(j) - dot) * scale
-              c = 0
-              while (c < d) {
-                dq(xb + c) += dsj * ps.k(j * d + c)
-                dk(j * d + c) += dsj * ps.q(xb + c)
-                c += 1
-              }
-              j += 1
-            }
-            i += 1
-          }
-          // projections and embeddings (masked inputs have no emb grad)
-          i = 0
-          while (i < nPos) {
-            val xb = i * d
-            mvGrad(p, grad, off(5), d, d, ps.x, xb, dq, xb, dx, xb)
-            mvGrad(p, grad, off(6), d, d, ps.x, xb, dk, xb, dx, xb)
-            mvGrad(p, grad, off(7), d, d, ps.x, xb, dv, xb, dx, xb)
-            val masked = (mask & (1 << i)) != 0
-            var c = 0
-            while (c < d) {
-              grad(off(0) + i * d + c) += dx(xb + c)
-              if (!masked) grad(embOff(i, t(i)) + c) += dx(xb + c)
-              c += 1
-            }
-            i += 1
-          }
-        }
+        while (i < nPos) { hw(i) = if ((mask & (1 << i)) != 0) ws else 0.0; i += 1 }
+        loss = net.example(loss, maskInputs(t, mask, in), t, hw, grad)
       }
     }
     loss
   }
 
-  /** Deterministic full-batch Adam (the AR leg's optimizer). */
+  /** Deterministic full-batch Adam ([[AttentionNet.adam]], the AR leg's
+    * optimizer). */
   def fit(data: Array[(Int, Int, Int, Int, Double)], steps: Int,
       lr: Double = 0.01): NarMlm = {
-    val g = new Array[Double](nParams)
-    val m = new Array[Double](nParams)
-    val v = new Array[Double](nParams)
-    val (b1, b2, eps) = (0.9, 0.999, 1e-8)
-    var s = 1
-    while (s <= steps) {
-      java.util.Arrays.fill(g, 0.0)
-      lossAndGrad(data, g)
-      val c1 = 1.0 - math.pow(b1, s.toDouble)
-      val c2 = 1.0 - math.pow(b2, s.toDouble)
-      var i = 0
-      while (i < nParams) {
-        m(i) = b1 * m(i) + (1 - b1) * g(i)
-        v(i) = b2 * v(i) + (1 - b2) * g(i) * g(i)
-        params(i) -= lr * (m(i) / c1) / (math.sqrt(v(i) / c2) + eps)
-        i += 1
-      }
-      s += 1
-    }
+    net.adam(steps, lr)(lossAndGrad(data, _))(_ => ())
     this
   }
 
@@ -389,12 +113,17 @@ final class NarMlm(
   def loss(data: Array[(Int, Int, Int, Int, Double)]): Double =
     lossAndGrad(data, null)
 
+  /** Every head's distribution for tokens `t` under `mask`; the arrays
+    * are the network's workspace, overwritten by the next pass. */
+  private[graft] def heads(t: Array[Int], mask: Int): Array[Array[Double]] =
+    net.forward(maskInputs(t, mask, new Array[Int](nPos)))
+
   /** One conditional by the reference's masking trick: mask position i
     * AND every still-unknown position (`unknownMask`), feed the
     * observed codes, read head i. */
   def conditional(i: Int, t: Array[Int], unknownMask: Int): Array[Double] = {
     require((unknownMask & (1 << i)) != 0, "target must be masked")
-    forward(t, unknownMask, fwdPass)(i).clone()
+    heads(t, unknownMask)(i).clone()
   }
 
   /** Enumerated model joint over the full code cross-product via the

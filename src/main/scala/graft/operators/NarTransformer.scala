@@ -15,21 +15,12 @@ package graft.operators
   * different (AR) training objective — documented as a re-expression,
   * not a faithful copy.
   *
-  * Architecture (the minimum transformer block that serves that goal):
-  *  - token sequence `[BOS, c, o, l]`; position i's input is the
-  *    column-value embedding plus a learned positional embedding (the
-  *    reference embeds each column's discretized value the same way);
-  *  - a single-head scaled-dot-product self-attention layer with the
-  *    CAUSAL mask (position i attends to j ≤ i), residual-connected;
-  *  - a ReLU feed-forward block, residual-connected (LayerNorm is
-  *    omitted: at d=16 over catalog-sized domains Adam converges
-  *    without it, and dropping it keeps the hand-rolled backprop —
-  *    this sandbox has no autograd — small enough to gradient-check
-  *    exhaustively in the spec);
-  *  - per-position softmax output heads: position 0 predicts `c`
-  *    (unconditioned — the first autoregressive slot), 1 predicts
-  *    `o | c`, 2 predicts `l | c, o`, 3 predicts the fanout code
-  *    `f | c, o, l` (the reference's fanout columns).
+  * Architecture: the shared [[AttentionNet]] block with the CAUSAL
+  * mask (position i attends to j ≤ i) over the token sequence
+  * `[BOS, c, o, l]` (BOS carries no token embedding); its
+  * per-position softmax heads read position 0 as `c` (unconditioned —
+  * the first autoregressive slot), 1 as `o | c`, 2 as `l | c, o`, 3 as
+  * the fanout code `f | c, o, l` (the reference's fanout columns).
   *
   * Training is full-batch Adam over the WEIGHTED distinct-combo table
   * of the encoded training batch — grouping the sample's rows by
@@ -45,300 +36,26 @@ final class NarTransformer(
     val cMax: Int, val oMax: Int, val lMax: Int, val fMax: Int,
     val d: Int, val h: Int, seed: Long) {
 
-  private val nPos = 4
-  private val vocab = Array(cMax, oMax, lMax, fMax)
-
-  // ---- flat parameter layout (one array → trivial Adam + grad-check) ----
-  // [posEmb 4*d | embC cMax*d | embO oMax*d | embL lMax*d |
-  //  Wq d*d | Wk d*d | Wv d*d | Wo d*d |
-  //  W1 h*d | b1 h | W2 d*h | b2 d |
-  //  U0 cMax*d | b0 cMax | U1 oMax*d | bo1 oMax | U2 lMax*d | bo2 lMax |
-  //  U3 fMax*d | bo3 fMax]
-  private val sizes: Array[Int] = Array(
-    nPos * d, cMax * d, oMax * d, lMax * d,
-    d * d, d * d, d * d, d * d,
-    h * d, h, d * h, d,
-    cMax * d, cMax, oMax * d, oMax, lMax * d, lMax, fMax * d, fMax)
-  private val offs: Array[Int] = sizes.scanLeft(0)(_ + _)
-  val nParams: Int = offs.last
-
-  val params: Array[Double] = {
-    val rng = new java.util.Random(seed)
-    // small-gaussian init everywhere; output biases start at zero so the
-    // initial predictive distributions are near-uniform
-    val p = Array.fill(nParams)(rng.nextGaussian() * 0.1)
-    var s = 0
-    while (s < sizes.length) {
-      val isBias = s == 9 || s == 11 || s % 2 == 1 && s >= 13
-      if (isBias) java.util.Arrays.fill(p, offs(s), offs(s + 1), 0.0)
-      s += 1
-    }
-    p
-  }
-
-  @inline private def off(i: Int): Int = offs(i)
-
-  /** Embedding row start for position i's token t (position 0 has no
-    * token table — its input is the positional embedding alone). */
-  private def embOff(i: Int, t: Int): Int = off(i) + t * d
-
-  // matvec y += M(rows x cols, row-major at mo) * x
-  private def mv(p: Array[Double], mo: Int, rows: Int, cols: Int,
-      x: Array[Double], xo: Int, y: Array[Double], yo: Int): Unit = {
-    var r = 0
-    while (r < rows) {
-      var acc = 0.0; var c = 0; val base = mo + r * cols
-      while (c < cols) { acc += p(base + c) * x(xo + c); c += 1 }
-      y(yo + r) += acc; r += 1
-    }
-  }
-
-  // grad of matvec: dM += dy ⊗ x ; dx += M^T dy
-  private def mvGrad(p: Array[Double], g: Array[Double], mo: Int, rows: Int,
-      cols: Int, x: Array[Double], xo: Int, dy: Array[Double], dyo: Int,
-      dx: Array[Double], dxo: Int): Unit = {
-    var r = 0
-    while (r < rows) {
-      val dyr = dy(dyo + r); val base = mo + r * cols
-      var c = 0
-      while (c < cols) {
-        g(base + c) += dyr * x(xo + c)
-        if (dx != null) dx(dxo + c) += p(base + c) * dyr
-        c += 1
-      }
-      r += 1
-    }
-  }
-
-  private def softmaxInPlace(a: Array[Double], o: Int, n: Int): Unit = {
-    var m = Double.NegativeInfinity; var i = 0
-    while (i < n) { if (a(o + i) > m) m = a(o + i); i += 1 }
-    var z = 0.0; i = 0
-    while (i < n) { val e = math.exp(a(o + i) - m); a(o + i) = e; z += e; i += 1 }
-    i = 0
-    while (i < n) { a(o + i) /= z; i += 1 }
-  }
-
-  /** Workspace for one example's forward/backward pass. */
-  private final class Pass {
-    val x = new Array[Double](nPos * d)      // embedded inputs
-    val q = new Array[Double](nPos * d)
-    val k = new Array[Double](nPos * d)
-    val v = new Array[Double](nPos * d)
-    val a = new Array[Double](nPos * nPos)   // attention rows (causal)
-    val ctx = new Array[Double](nPos * d)    // attention context
-    val y = new Array[Double](nPos * d)      // post-attention residual
-    val u = new Array[Double](nPos * h)      // FFN hidden (post-ReLU)
-    val z = new Array[Double](nPos * d)      // block output
-    val probs = Array.tabulate(nPos)(i => new Array[Double](vocab(i)))
-  }
-  private val fwdPass = new Pass
-  private val scale = 1.0 / math.sqrt(d.toDouble)
-
-  /** Forward pass for tokens `t` (0-based codes per position 1..3);
-    * fills `ps` and returns per-position softmax distributions. */
-  private def forward(t: Array[Int], ps: Pass): Array[Array[Double]] = {
-    val p = params
-    java.util.Arrays.fill(ps.q, 0.0); java.util.Arrays.fill(ps.k, 0.0)
-    java.util.Arrays.fill(ps.v, 0.0); java.util.Arrays.fill(ps.ctx, 0.0)
-    var i = 0
-    while (i < nPos) {
-      val xb = i * d
-      var j = 0
-      while (j < d) {
-        ps.x(xb + j) = p(off(0) + i * d + j) +
-          (if (i == 0) 0.0 else p(embOff(i, t(i - 1)) + j))
-        j += 1
-      }
-      mv(p, off(4), d, d, ps.x, xb, ps.q, xb)
-      mv(p, off(5), d, d, ps.x, xb, ps.k, xb)
-      mv(p, off(6), d, d, ps.x, xb, ps.v, xb)
-      i += 1
-    }
-    i = 0
-    while (i < nPos) {
-      // causal scores over j ≤ i
-      var j = 0
-      while (j <= i) {
-        var s = 0.0; var c = 0
-        while (c < d) { s += ps.q(i * d + c) * ps.k(j * d + c); c += 1 }
-        ps.a(i * nPos + j) = s * scale
-        j += 1
-      }
-      softmaxInPlace(ps.a, i * nPos, i + 1)
-      var c = 0
-      while (c < d) {
-        var acc = 0.0; j = 0
-        while (j <= i) { acc += ps.a(i * nPos + j) * ps.v(j * d + c); j += 1 }
-        ps.ctx(i * d + c) = acc
-        c += 1
-      }
-      // y = x + Wo ctx ; z = y + W2 relu(W1 y + b1) + b2
-      val xb = i * d
-      System.arraycopy(ps.x, xb, ps.y, xb, d)
-      mv(p, off(7), d, d, ps.ctx, xb, ps.y, xb)
-      var r = 0
-      while (r < h) {
-        var acc = p(off(9) + r); var cc = 0; val base = off(8) + r * d
-        while (cc < d) { acc += p(base + cc) * ps.y(xb + cc); cc += 1 }
-        ps.u(i * h + r) = if (acc > 0.0) acc else 0.0
-        r += 1
-      }
-      c = 0
-      while (c < d) { ps.z(xb + c) = ps.y(xb + c) + p(off(11) + c); c += 1 }
-      mv(p, off(10), d, h, ps.u, i * h, ps.z, xb)
-      // logits → probs
-      val uo = off(12 + 2 * i); val bo = off(13 + 2 * i)
-      val pr = ps.probs(i)
-      r = 0
-      while (r < vocab(i)) {
-        var acc = p(bo + r); var cc = 0; val base = uo + r * d
-        while (cc < d) { acc += p(base + cc) * ps.z(xb + cc); cc += 1 }
-        pr(r) = acc; r += 1
-      }
-      softmaxInPlace(pr, 0, vocab(i))
-      i += 1
-    }
-    ps.probs
-  }
+  // BOS has no token table: a zero-size emb_0
+  private val net = new AttentionNet(Array(0, cMax, oMax, lMax),
+    Array(cMax, oMax, lMax, fMax), d, h, causal = true, seed)
+  val nParams: Int = net.nParams
+  val params: Array[Double] = net.params
 
   /** Weighted cross-entropy loss over `data` rows (c, o, l, f, weight),
-    * accumulating gradients into `grad` when non-null. */
+    * every head scored; gradients accumulate into `grad` when non-null. */
   def lossAndGrad(data: Array[(Int, Int, Int, Int, Double)],
       grad: Array[Double]): Double = {
-    val p = params
     var loss = 0.0
     val wTot = data.map(_._5).sum
-    val ps = fwdPass
-    val dz = new Array[Double](nPos * d)
-    val dy = new Array[Double](nPos * d)
-    val dctx = new Array[Double](nPos * d)
-    val dq = new Array[Double](nPos * d)
-    val dk = new Array[Double](nPos * d)
-    val dv = new Array[Double](nPos * d)
-    val dx = new Array[Double](nPos * d)
-    val du = new Array[Double](h)
+    val in = Array(-1, 0, 0, 0)
+    val tgt = new Array[Int](4)
+    val hw = new Array[Double](4)
     data.foreach { case (c0, o0, l0, f0, w) =>
-      val t = Array(c0, o0, l0)
-      val tgt = Array(c0, o0, l0, f0)
-      val probs = forward(t, ps)
-      var i = 0
-      while (i < nPos) {
-        loss -= w / wTot * math.log(math.max(probs(i)(tgt(i)), 1e-300))
-        i += 1
-      }
-      if (grad != null) {
-        val ws = w / wTot
-        java.util.Arrays.fill(dz, 0.0); java.util.Arrays.fill(dy, 0.0)
-        java.util.Arrays.fill(dctx, 0.0); java.util.Arrays.fill(dq, 0.0)
-        java.util.Arrays.fill(dk, 0.0); java.util.Arrays.fill(dv, 0.0)
-        java.util.Arrays.fill(dx, 0.0)
-        // output heads: dlogits = ws * (probs - onehot); dz += U^T dlogits
-        i = 0
-        while (i < nPos) {
-          val xb = i * d
-          val uo = off(12 + 2 * i); val bo = off(13 + 2 * i)
-          var r = 0
-          while (r < vocab(i)) {
-            val dl = ws * (probs(i)(r) - (if (r == tgt(i)) 1.0 else 0.0))
-            grad(bo + r) += dl
-            var cc = 0; val base = uo + r * d
-            while (cc < d) {
-              grad(base + cc) += dl * ps.z(xb + cc)
-              dz(xb + cc) += p(base + cc) * dl
-              cc += 1
-            }
-            r += 1
-          }
-          i += 1
-        }
-        // FFN backward per position: z = y + W2 u + b2, u = relu(W1 y + b1)
-        i = 0
-        while (i < nPos) {
-          val xb = i * d
-          var c = 0
-          while (c < d) { grad(off(11) + c) += dz(xb + c); dy(xb + c) += dz(xb + c); c += 1 }
-          java.util.Arrays.fill(du, 0.0)
-          // dW2 += dz ⊗ u ; du += W2^T dz
-          var r = 0
-          while (r < d) {
-            val dzr = dz(xb + r); val base = off(10) + r * h
-            var cc = 0
-            while (cc < h) {
-              grad(base + cc) += dzr * ps.u(i * h + cc)
-              du(cc) += p(base + cc) * dzr
-              cc += 1
-            }
-            r += 1
-          }
-          // relu gate, then dW1 += du ⊗ y ; db1 += du ; dy += W1^T du
-          r = 0
-          while (r < h) {
-            val g = if (ps.u(i * h + r) > 0.0) du(r) else 0.0
-            grad(off(9) + r) += g
-            val base = off(8) + r * d
-            var cc = 0
-            while (cc < d) {
-              grad(base + cc) += g * ps.y(xb + cc)
-              dy(xb + cc) += p(base + cc) * g
-              cc += 1
-            }
-            r += 1
-          }
-          i += 1
-        }
-        // attention backward: y = x + Wo ctx
-        i = 0
-        while (i < nPos) {
-          val xb = i * d
-          var c = 0
-          while (c < d) { dx(xb + c) += dy(xb + c); c += 1 }
-          mvGrad(p, grad, off(7), d, d, ps.ctx, xb, dy, xb, dctx, xb)
-          // ctx_i = Σ_j a_ij v_j ; scores through softmax
-          val da = new Array[Double](i + 1)
-          var j = 0
-          while (j <= i) {
-            var acc = 0.0; c = 0
-            while (c < d) {
-              dv(j * d + c) += ps.a(i * nPos + j) * dctx(xb + c)
-              acc += ps.v(j * d + c) * dctx(xb + c)
-              c += 1
-            }
-            da(j) = acc
-            j += 1
-          }
-          // softmax jacobian: ds_j = a_j * (da_j - Σ_m a_m da_m)
-          var dot = 0.0; j = 0
-          while (j <= i) { dot += ps.a(i * nPos + j) * da(j); j += 1 }
-          j = 0
-          while (j <= i) {
-            val dsj = ps.a(i * nPos + j) * (da(j) - dot) * scale
-            c = 0
-            while (c < d) {
-              dq(xb + c) += dsj * ps.k(j * d + c)
-              dk(j * d + c) += dsj * ps.q(xb + c)
-              c += 1
-            }
-            j += 1
-          }
-          i += 1
-        }
-        // q/k/v projections and embeddings
-        i = 0
-        while (i < nPos) {
-          val xb = i * d
-          mvGrad(p, grad, off(4), d, d, ps.x, xb, dq, xb, dx, xb)
-          mvGrad(p, grad, off(5), d, d, ps.x, xb, dk, xb, dx, xb)
-          mvGrad(p, grad, off(6), d, d, ps.x, xb, dv, xb, dx, xb)
-          var c = 0
-          while (c < d) {
-            grad(off(0) + i * d + c) += dx(xb + c)
-            if (i > 0) grad(embOff(i, t(i - 1)) + c) += dx(xb + c)
-            c += 1
-          }
-          i += 1
-        }
-      }
+      in(1) = c0; in(2) = o0; in(3) = l0
+      tgt(0) = c0; tgt(1) = o0; tgt(2) = l0; tgt(3) = f0
+      java.util.Arrays.fill(hw, w / wTot)
+      loss = net.example(loss, in, tgt, hw, grad)
     }
     loss
   }
@@ -363,43 +80,25 @@ final class NarTransformer(
       lr: Double = 0.01): Seq[(Int, Seq[(Int, Int, Int, Double, Double)])] = {
     require(rungs.nonEmpty && rungs == rungs.sorted && rungs.head > 0,
       s"rungs must be ascending positive step counts: $rungs")
-    val g = new Array[Double](nParams)
-    val m = new Array[Double](nParams)
-    val v = new Array[Double](nParams)
-    val (b1, b2, eps) = (0.9, 0.999, 1e-8)
     val out = Seq.newBuilder[(Int, Seq[(Int, Int, Int, Double, Double)])]
-    var s = 1
-    while (s <= rungs.last) {
-      java.util.Arrays.fill(g, 0.0)
-      lossAndGrad(data, g)
-      val c1 = 1.0 - math.pow(b1, s.toDouble)
-      val c2 = 1.0 - math.pow(b2, s.toDouble)
-      var i = 0
-      while (i < nParams) {
-        m(i) = b1 * m(i) + (1 - b1) * g(i)
-        v(i) = b2 * v(i) + (1 - b2) * g(i) * g(i)
-        params(i) -= lr * (m(i) / c1) / (math.sqrt(v(i) / c2) + eps)
-        i += 1
-      }
+    net.adam(rungs.last, lr)(lossAndGrad(data, _)) { s =>
       if (rungs.contains(s)) out += ((s, enumerateJoint()))
-      s += 1
     }
     out.result()
   }
 
-  /** Weighted NLL of `data` under the CURRENT parameters (no gradient
-    * side effects beyond a scratch buffer) — the objective the
-    * hyperparameter search ranks trials by (the reference search's
-    * per-trial validation loss, run.py's tune report). */
+  /** Weighted NLL of `data` under the CURRENT parameters (forward
+    * passes only) — the objective the hyperparameter search ranks
+    * trials by (the reference search's per-trial validation loss,
+    * run.py's tune report). */
   def loss(data: Array[(Int, Int, Int, Int, Double)]): Double =
-    lossAndGrad(data, new Array[Double](nParams))
+    lossAndGrad(data, null)
 
   /** The four conditional distributions for one (c, o, l) prefix:
     * (P̂(c=·), P̂(o=· | c), P̂(l=· | c, o), P̂(f=· | c, o, l)) — one causal
     * forward pass serves all four heads. Returned arrays are copies. */
   def conditionals(c0: Int, o0: Int, l0: Int): Array[Array[Double]] =
-    forward(Array(c0, o0, l0), fwdPass).map(_.clone())
-
+    net.forward(Array(-1, c0, o0, l0)).map(_.clone())
   /** Enumerated model joint over the full code cross-product — the same
     * construction as [[NarModel.jointOf]] (structural zero re-imposed,
     * renormalized, einv = E[1/fanout | combo]) with every factor,

@@ -103,9 +103,11 @@ class SourcesMetricsSpec extends SparkSpec {
   }
 
   test("qError is symmetric and ≥ 1") {
-    val df = Seq((10.0, 100.0), (100.0, 10.0), (5.0, 5.0)).toDF("est", "truth")
+    // zeros follow calc_q_err (run.py:60-67): the nonzero side, or 1
+    val df = Seq((10.0, 100.0), (100.0, 10.0), (5.0, 5.0),
+      (0.0, 5.0), (5.0, 0.0), (0.0, 0.0)).toDF("est", "truth")
     val got = df.select(Metrics.qError(col("est"), col("truth")).as("q"))
       .as[Double].collect().toSeq
-    assert(got == Seq(10.0, 10.0, 1.0))
+    assert(got == Seq(10.0, 10.0, 1.0, 5.0, 5.0, 1.0))
   }
 }
