@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Fanouts, JoinSample, Metrics}
-import graft.query.{CardBenchmark, Predicate, PredicateSql, PseudoSql}
+import graft.query.{CardBenchmark, Predicate, PredicateSql}
 
 /** Sampling-based estimation (SURVEY.md §2 rows 12/14): the weighted
   * join sample, the sample-based cardinality estimator + bootstrap CI,
@@ -39,10 +39,7 @@ object QueriesSampleEst extends QueryModule {
   private val coveredTables = Set("customer", "orders", "lineitem")
 
   private lazy val coveredSpecs: Seq[(String, graft.query.ParsedQuery)] =
-    CardBenchmark.specs.flatMap { case (id, sql) =>
-      val q = PseudoSql.parse(sql)
-      if (q.tables.forall(coveredTables)) Some((id, q)) else None
-    }
+    CardBenchmark.parsed.filter(_._2.tables.forall(coveredTables))
 
   /** Predicate columns per table across the covered specs — carried
     * through the oracle's sample CTEs so sample_est evaluates on the
@@ -172,21 +169,16 @@ object QueriesSampleEst extends QueryModule {
     */
   def sampleEstQ(spark: SparkSession, dir: String): DataFrame = {
     val load = Fanouts.loader(spark, dir)
-    val covered = Set("customer", "orders", "lineitem")
     val sample = chainSample(spark, dir)
     val w = JoinSample.totalWeight(chain, "customer", load)
       .select(col("total_weight").cast("double"))
-    val specs = CardBenchmark.specs.filter { case (_, sql) =>
-      PseudoSql.parse(sql).tables.forall(covered)
-    }
     // ONE aggregation pass computes every spec's satisfied-count: the
     // old per-spec agg ran |specs| separate 3-stage jobs over the same
     // cached sample (pure per-stage scheduling latency — the sample is
     // ~2000 rows), then unioned the 1-row results. Each __k_i is the
     // identical sum(when(sat_i, ...)) expression; the per-spec estimate
     // rows are re-expanded from the single result row by an explode.
-    val sats = specs.map { case (id, sql) =>
-      val q = PseudoSql.parse(sql)
+    val sats = coveredSpecs.map { case (id, q) =>
       val need = q.tables.filterNot(_ == "customer")
       val flags = need.map(t => col(s"__in__:$t"))
       val sat = (Predicate.conjunction(

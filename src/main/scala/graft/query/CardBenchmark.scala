@@ -50,6 +50,12 @@ object CardBenchmark {
       " AND l_tax < 0.05")
   )
 
+  /** [[specs]] parsed once, in spec order — the list every estimator
+    * arm, sampler and oracle generator reads.
+    */
+  lazy val parsed: Seq[(String, ParsedQuery)] =
+    specs.map { case (id, sql) => (id, PseudoSql.parse(sql)) }
+
   /** Map an unqualified TPC-H-ish column to its table by prefix — the
     * schema's single-letter prefixes are unambiguous by construction.
     */

@@ -23,11 +23,9 @@ class EntrySpec extends SparkSpec {
     // The round-5 testdata drift (TIMESTAMP_NTZ) surfaced as per-query
     // ANALYSIS errors that silently dropped five queries from the
     // driver's correctness run. Analysis failures are catchable at plan
-    // time without executing anything — so force-plan ALL of them.
-    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try { fn(spark, sf).queryExecution.executedPlan; None }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(200)}") }
-    }
+    // time without executing anything — so force-plan ALL of them (in
+    // the registry pass shared with PlanSizeAuditSpec).
+    val bad = RegistryPlanPass(spark, sf).failures
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 

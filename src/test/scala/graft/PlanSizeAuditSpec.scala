@@ -1,10 +1,5 @@
 package graft
 
-import scala.collection.mutable
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
-
 /** Audit of every registered query's LOGICAL plan size — the armor the
   * round-9 `kcore_membership` pathology demands. An iterate operator
   * that references its previous round more than once doubles the
@@ -18,73 +13,30 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * is exactly where an exponential plan hides once the returned frame
   * is a collapsed LocalRelation — the kcore shape).
   *
-  * The memo namespace is aliased (`/./`) so this spec sees cold builds
-  * regardless of suite ordering; Checkpoint keys by basename, so
-  * warehouse-backed trainers still serve without retraining.
+  * The pass itself (cold memos, the construction-time listener, the
+  * node bound) is `RegistryPlanPass`, shared with `EntrySpec`'s
+  * resolve-and-plan check so the registry is built and planned once.
   */
 class PlanSizeAuditSpec extends SparkSpec {
-
-  /** Per-plan node bound. Healthy plans here top out around a few
-    * thousand nodes (estimator unions over the spec list, multi-memo
-    * compositions); one more doubling of an exponential unroll blows
-    * straight past this, so the bound catches regressions with wide
-    * margin on both sides.
-    */
-  private val bound = 8000
-
-  /** Node count with a hard traversal cap, so a hypothetical
-    * deep-exponential tree fails the assert in bounded time instead of
-    * hanging the count itself. Descends into subquery plans.
-    */
-  private def nodeCount(plan: LogicalPlan, cap: Int): Int = {
-    val stack = mutable.Stack[LogicalPlan](plan)
-    var n = 0
-    while (stack.nonEmpty && n < cap) {
-      val p = stack.pop()
-      n += 1
-      stack.pushAll(p.children)
-      stack.pushAll(p.subqueries)
-    }
-    n
-  }
+  import RegistryPlanPass.bound
 
   test("every registered query stays under the plan-node bound (cold memos)") {
-    val coldSf = sf.replaceAll("(sf[0-9.]+)$", "./$1") // fresh Memo keys
-    val maxSeen = new java.util.concurrent.atomic.AtomicInteger(0)
-    val worst = new java.util.concurrent.atomic.AtomicReference[String]("")
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = {
-        val n = nodeCount(qe.analyzed, bound * 4)
-        if (n > maxSeen.getAndAccumulate(n, math.max)) worst.set(funcName)
-      }
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val sizes = SparkEntry.queries.toSeq.sortBy(_._1).map {
-        case (name, fn) => name -> nodeCount(
-          fn(spark, coldSf).queryExecution.analyzed, bound * 4)
-      }
-      val top = sizes.sortBy(-_._2).take(8)
-      info("largest analyzed plans: " +
-        top.map(s => s"${s._1}:${s._2}").mkString(" "))
-      val over = sizes.filter(_._2 >= bound)
-      assert(over.isEmpty,
-        s"registered plans over the $bound-node bound: $over — an " +
-          "iterate operator is probably referencing its previous round " +
-          "more than once per round; literal-checkpoint each round")
-      // drain the (async) execution-listener bus before reading the max
-      // — a fixed sleep can under-read maxSeen on a loaded machine and
-      // silently pass an exponential-lineage regression
-      org.apache.spark.GraftListenerBusDrain.drain(spark.sparkContext, 60000)
-      info(s"largest construction-time action plan: ${maxSeen.get()} " +
-        s"nodes (${worst.get()})")
-      assert(maxSeen.get() < bound,
-        s"a construction-time action (memo build) planned ${maxSeen.get()} " +
-          s"nodes (action: ${worst.get()}) — exponential lineage is hiding " +
-          "behind a literal checkpoint; truncate per iteration instead")
-    } finally spark.listenerManager.unregister(listener)
+    val pass = RegistryPlanPass(spark, sf)
+    assert(pass.failures.isEmpty, "registered queries that do not resolve and plan:\n" +
+      pass.failures.mkString("\n"))
+    val top = pass.sizes.sortBy(-_._2).take(8)
+    info("largest analyzed plans: " +
+      top.map(s => s"${s._1}:${s._2}").mkString(" "))
+    val over = pass.sizes.filter(_._2 >= bound)
+    assert(over.isEmpty,
+      s"registered plans over the $bound-node bound: $over — an " +
+        "iterate operator is probably referencing its previous round " +
+        "more than once per round; literal-checkpoint each round")
+    val (maxSeen, worst) = pass.maxAction
+    info(s"largest construction-time action plan: $maxSeen nodes ($worst)")
+    assert(maxSeen < bound,
+      s"a construction-time action (memo build) planned $maxSeen " +
+        s"nodes (action: $worst) — exponential lineage is hiding " +
+        "behind a literal checkpoint; truncate per iteration instead")
   }
 }
